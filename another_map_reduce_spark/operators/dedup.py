@@ -1,28 +1,33 @@
 """Deduplication operators — [extension] (driver north star).
 
-Five dedup families over a document corpus, ordered by cost/fidelity:
+Every pair operator is one dataflow, block → verify: emit candidate
+keys per document, equi-join on them, then score only the candidate
+pairs with an exact measure.  Blocking keys / verify measure:
 
-* exact           — hash-groupBy on the raw text (one shuffle)
-* fingerprint     — exact on a normalized md5 (whitespace/case-robust)
-* ngram_jaccard   — EXACT all-pairs word-n-gram Jaccard via a shingle
-                    self-join (the ground truth the approximate
-                    methods are judged against)
-* minhash_lsh     — MinHash signatures + banded LSH candidates, then
-                    exact-Jaccard verification of candidates only
-* simhash         — 64-bit SimHash + pigeonhole chunk blocking for
-                    hamming-distance candidates
+* ngram_jaccard_pairs          every shingle / Jaccard (exact ground truth)
+* prefix_filter_jaccard_pairs  rarest-shingle prefix / Jaccard (exact)
+* containment_pairs            shingle, delta × history / containment
+* minhash_lsh_pairs            MinHash band keys / Jaccard
+* simhash_pairs                4×16-bit SimHash chunks / hamming
+* lev1_pairs                   FastSS deletion keys / Levenshtein
+
+``dedup_exact`` / ``dedup_fingerprint`` need no pairs (one Window
+exchange).  The LSH band, SimHash chunk and containment posting indexes
+persist with append / delete / compact, and the ``incremental_*``
+operators probe them with a new batch so history is never re-blocked.
+Shared stages, each written once: ``shingle_docs``,
+``_signature_frame``, ``bands_from_signature`` (also the sign-LSH
+banding of ``similarity.cosine_pairs_lsh``), ``_verify_jaccard`` and
+``_cap_doc_freq`` (the ``max_df`` cap).
 
 Everything is pure Column expressions (higher-order functions, xxhash64)
 — no Python UDFs — so signatures compute at scan speed and the only
 shuffles are the candidate-pair joins.
 
-Scale design (100 TB): the exact path's shingle self-join blows up on
-high-document-frequency shingles; ``max_df`` caps that (standard
-practice — a shingle in >max_df docs contributes candidates
-quadratically but information logarithmically).  MinHash-LSH replaces
-the all-pairs join with |bands| small equi-joins on band keys, which is
-the linear-ish scale path; its candidate verification touches only
-plausible pairs.
+Scale design (100 TB): ``max_df`` caps the exact self-join's blow-up on
+high-document-frequency shingles (a shingle in >max_df docs contributes
+candidates quadratically but information logarithmically); MinHash-LSH
+replaces the all-pairs join with |bands| small equi-joins on band keys.
 """
 
 from __future__ import annotations
@@ -121,6 +126,56 @@ def shingle_docs(
     ).repartition(par)
 
 
+def _cap_doc_freq(sh: DataFrame, max_df: int | None) -> DataFrame:
+    """Drop the rows of an exploded ``shingle`` frame whose shingle
+    occurs in more than ``max_df`` rows (no-op when ``max_df`` is None)."""
+    if max_df is None:
+        return sh
+    kept = (
+        sh.groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") <= max_df)
+        .select("shingle")
+    )
+    return sh.join(kept, "shingle")
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    first: tuple[str, DataFrame],
+    second: tuple[str, DataFrame],
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs: join each side's ``sets`` frame
+    (its ``doc`` and ``shingles`` columns) onto ``cand`` on ``key``
+    (``first``, then ``second``) and keep ``cand``'s columns + ``jac`` ≥
+    threshold, sorted.
+
+    shuffle_hash with the CANDIDATE side as build: candidates ≪ corpus
+    (near-dup pairs), while the sets side carries every document's
+    shingle array — broadcasting it would collect the corpus to the
+    driver.  Hash join avoids even sorting the big side.  The hint
+    binds the ``first`` join only: the planner picks the ``second``
+    join's strategy from size estimates, and may broadcast that side's
+    sets when they fit under the broadcast threshold.
+    """
+    verified = cand.hint("shuffle_hash")
+    for i, (key, sets) in enumerate((first, second), 1):
+        verified = verified.join(
+            sets.select(
+                F.col("doc").alias(key), F.col("shingles").alias(f"_sh{i}")
+            ),
+            key,
+        )
+    inter = F.size(F.array_intersect("_sh1", "_sh2"))
+    union = F.size("_sh1") + F.size("_sh2") - inter
+    return (
+        verified.select(*cand.columns, (inter / union).alias("jac"))
+        .where(F.col("jac") >= threshold)
+        .orderBy(*cand.columns)
+    )
+
+
 # ---------------------------------------------------------------------------
 # Exact / fingerprint dedup
 # ---------------------------------------------------------------------------
@@ -184,11 +239,7 @@ def ngram_jaccard_pairs(
     sh = shingle_docs(df, text_col, id_col, n).select(
         "doc", F.explode("shingles").alias("shingle")
     )
-    if max_df is not None:
-        df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        sh = sh.join(
-            df_counts.where(F.col("df") <= max_df).select("shingle"), "shingle"
-        )
+    sh = _cap_doc_freq(sh, max_df)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     # merge hint: the build side is the CORPUS shingle set — Catalyst's
@@ -269,14 +320,7 @@ def containment_from_shingles(
     dag-sharing lesson): ``containment_pairs`` tokenizes each side
     separately because its inputs are arbitrary DataFrames.
     """
-    if max_df is not None:
-        hot = (
-            hsh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        hsh = hsh.join(hot, "shingle")
+    hsh = _cap_doc_freq(hsh, max_df)
     dsizes = dsh.groupBy("new_doc").agg(F.count("*").alias("sz_new"))
     # history side as the sort-merge partner: the post-aggregate size
     # estimate undershoots exactly as in ngram_jaccard_pairs, and a
@@ -375,18 +419,7 @@ def prefix_filter_jaccard_pairs(
         .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
         .dropDuplicates(["d1", "d2"])
     )
-    s1 = sh.select(F.col("doc").alias("d1"), F.col("shingles").alias("sh1"))
-    s2 = sh.select(F.col("doc").alias("d2"), F.col("shingles").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    return (
-        cand.hint("shuffle_hash")
-        .join(s1, "d1")
-        .join(s2, "d2")
-        .select("d1", "d2", (inter / union).alias("jac"))
-        .where(F.col("jac") >= threshold)
-        .orderBy("d1", "d2")
-    )
+    return _verify_jaccard(cand, ("d1", sh), ("d2", sh), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -425,6 +458,55 @@ def minhash_signature(shingles: Column, k: int = 128) -> Column:
     )
 
 
+def _signature_frame(
+    df: DataFrame, n: int, k: int, text_col: str, id_col: str
+) -> DataFrame:
+    """(doc, shingles, mh) — each document's shingle set and k-slot
+    MinHash signature, materialised behind a repartition barrier: the
+    banding slices "mh" once per band, and without materialisation
+    Catalyst's collapsed projection would re-run the whole fold ×bands
+    (no let-binding)."""
+    return (
+        shingle_docs(df, text_col, id_col, n)
+        .withColumn("mh", minhash_signature(F.col("shingles"), k))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    )
+
+
+def bands_from_signature(
+    sig: DataFrame, k: int = 128, bands: int = 32, doc_col: str = "doc"
+) -> DataFrame:
+    """(doc, band, sig) band keys from a ``(doc, mh)`` signature frame.
+
+    The one banding step of every LSH operator (MinHash pairs, the
+    stored band index and its delta probe, sign-LSH cosine pairs):
+    hash each k/bands-slot slice of the ``mh`` array into one band
+    key.  Pure projection — adds no exchange of its own.  Rejects a
+    banding that would drop signature slots or hash empty slices (every
+    document would then share every band key: a silent all-pairs join).
+    """
+    if bands < 1 or k < bands or k % bands:
+        raise ValueError(
+            f"rows per band = k // bands must be a positive integer with no "
+            f"remainder; got k={k} signature slots over bands={bands}"
+        )
+    r = k // bands
+    return sig.select(
+        doc_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("band"),
+                        F.hash(F.slice(F.col("mh"), j * r + 1, r)).alias("sig"),
+                    )
+                    for j in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select(doc_col, "bk.band", "bk.sig")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -438,8 +520,8 @@ def minhash_lsh_pairs(
 
     rows-per-band r = k/bands; with independent slot hashes the
     candidate capture probability for a pair at Jaccard s is exactly
-    1-(1-s^r)^b — k=128, b=32, r=4 puts the S-curve midpoint at ≈0.56,
-    so a pair at s=0.8 is missed w.p. (1-0.8⁴)^32 ≈ 3e-9 and at s=0.9
+    1-(1-s^r)^b — k=128, b=32, r=4 puts the S-curve midpoint at ≈0.38,
+    so a pair at s=0.8 is missed w.p. (1-0.8⁴)^32 ≈ 4.7e-8 and at s=0.9
     w.p. 1.5e-15, while the all-pairs join is avoided entirely:
     candidates come from |bands| equi-joins on (band, band_hash), each
     touching only docs that collide (measured 200 candidates out of
@@ -448,33 +530,13 @@ def minhash_lsh_pairs(
     probability ≈ 1, which is why the driver oracle for
     ``dedup_minhash_lsh`` is the exact-Jaccard SQL.
     """
-    r = k // bands
-    docs = shingle_docs(df, text_col, id_col, n)
-    # barrier after the signature fold: the banding below slices "mh"
-    # once per band, and without materialisation Catalyst's collapsed
-    # projection would re-run the whole fold ×bands (no let-binding)
-    sig = docs.withColumn(
-        "mh", minhash_signature(F.col("shingles"), k)
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
+    sig = _signature_frame(df, n, k, text_col, id_col)
     # Band join carries ONLY (doc, band, sig): exploding the shingle
     # sets through the ×bands duplication would replicate the corpus
     # payload ×16 through the shuffle.  Shingles are joined back once
     # per side AFTER candidate dedup, so each document's set moves
     # exactly twice regardless of band count.
-    banded = sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.hash(F.slice(F.col("mh"), j * r + 1, r)).alias("sig"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "bk.band", "bk.sig")
+    banded = bands_from_signature(sig, k, bands)
 
     a = banded.alias("a")
     # shuffle_hash hint: both sides are corpus-scale (N·bands rows) —
@@ -493,23 +555,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
         .dropDuplicates(["d1", "d2"])
     )
-    sets = sig.select("doc", "shingles")
-    s1 = sets.select(F.col("doc").alias("d1"), F.col("shingles").alias("sh1"))
-    s2 = sets.select(F.col("doc").alias("d2"), F.col("shingles").alias("sh2"))
-    # shuffle_hash with the CANDIDATE side as build: candidates ≪
-    # corpus (near-dup pairs), while the sets side carries every
-    # document's shingle array — broadcasting it would collect the
-    # corpus to the driver.  Hash join avoids even sorting the big side.
-    verified = cand.hint("shuffle_hash").join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    return (
-        verified.select(
-            "d1", "d2", (inter / union).alias("jac")
-        )
-        .where(F.col("jac") >= threshold)
-        .orderBy("d1", "d2")
-    )
+    return _verify_jaccard(cand, ("d1", sig), ("d2", sig), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -873,32 +919,6 @@ def lev1_pairs(vocab: DataFrame, word_col: str = "w") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def bands_from_signature(
-    sig: DataFrame, k: int = 128, bands: int = 32, doc_col: str = "doc"
-) -> DataFrame:
-    """(doc, band, sig) band keys from a ``(doc, mh)`` signature frame.
-
-    The shared banding step of ``lsh_band_index`` and the incremental
-    delta path: hash each k/bands-slot slice of the signature into one
-    band key.  Pure projection — adds no exchange of its own.
-    """
-    r = k // bands
-    return sig.select(
-        doc_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.hash(F.slice(F.col("mh"), j * r + 1, r)).alias("sig"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(doc_col, "bk.band", "bk.sig")
-
-
 def lsh_band_index(
     df: DataFrame,
     n: int = 3,
@@ -917,11 +937,9 @@ def lsh_band_index(
     construction as ``minhash_lsh_pairs`` (independent slot hashes,
     k/bands rows per band), so capture probabilities carry over.
     """
-    docs = shingle_docs(df, text_col, id_col, n)
-    sig = docs.withColumn(
-        "mh", minhash_signature(F.col("shingles"), k)
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return bands_from_signature(sig, k, bands)
+    return bands_from_signature(
+        _signature_frame(df, n, k, text_col, id_col), k, bands
+    )
 
 
 def lsh_append_docs(
@@ -1055,11 +1073,8 @@ def incremental_minhash_pairs(
     what made this the widest plan in the suite (30 exchanges; the
     same dag-sharing fix that took triangle counting 50 → 15).
     """
-    dsig = (
-        shingle_docs(delta, text_col, id_col, n)
-        .withColumn("mh", minhash_signature(F.col("shingles"), k))
-        .repartition(delta.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False)
+    dsig = _signature_frame(delta, n, k, text_col, id_col).localCheckpoint(
+        eager=False
     )
     dband = bands_from_signature(dsig, k, bands).withColumnRenamed(
         "doc", "new_doc"
@@ -1072,9 +1087,6 @@ def incremental_minhash_pairs(
         .where(F.col("doc") != F.col("new_doc"))
         .select("new_doc", F.col("doc").alias("dup_of"))
         .dropDuplicates(["new_doc", "dup_of"])
-    )
-    dsh = dsig.select(
-        F.col("doc").alias("new_doc"), F.col("shingles").alias("sh_new")
     )
     # Verify shingles ONLY the candidate history docs: the distinct
     # dup_of set is candidate-bounded (≈ true near-dups), so it
@@ -1090,20 +1102,14 @@ def incremental_minhash_pairs(
         id_col,
         "leftsemi",
     )
-    hsh = shingle_docs(cand_docs, text_col, id_col, n).select(
-        F.col("doc").alias("dup_of"), F.col("shingles").alias("sh_old")
-    )
-    # candidate side as hash build; history shingles never broadcast
-    verified = (
-        cand.hint("shuffle_hash").join(hsh, "dup_of")
-        .join(F.broadcast(dsh), "new_doc")
-    )
-    inter = F.size(F.array_intersect("sh_new", "sh_old"))
-    union = F.size("sh_new") + F.size("sh_old") - inter
-    return (
-        verified.select("new_doc", "dup_of", (inter / union).alias("jac"))
-        .where(F.col("jac") >= threshold)
-        .orderBy("new_doc", "dup_of")
+    hsh = shingle_docs(cand_docs, text_col, id_col, n)
+    # History join first: joining the broadcast delta first would carry
+    # its shingle arrays through the history join's candidate shuffle.
+    return _verify_jaccard(
+        cand,
+        ("dup_of", hsh),
+        ("new_doc", F.broadcast(dsig)),
+        threshold,
     )
 
 

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from another_map_reduce_spark.operators.dedup import bands_from_signature
 from another_map_reduce_spark.storeops import (
     read_member,
     read_table,
@@ -206,21 +207,11 @@ def signlsh_bands(
         bits = (m @ planes.T > 0).astype(np.int32)
         return pd.Series(list(bits))
 
+    # the bit vector takes the signature column name the banding reads
     staged = spread.select(
-        "id", _sign_bits(F.col("_v")).alias("bits")
+        "id", _sign_bits(F.col("_v")).alias("mh")
     ).repartition(par)
-    band_sigs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(F.slice(F.col("bits"), b * rows_per_band + 1, rows_per_band)).alias(
-                "sig"
-            ),
-        )
-        for b in range(bands)
-    ]
-    return staged.select(
-        "id", F.explode(F.array(*band_sigs)).alias("bk")
-    ).select("id", "bk.band", "bk.sig")
+    return bands_from_signature(staged, nbits, bands, doc_col="id")
 
 
 def cosine_pairs_lsh(
@@ -233,11 +224,12 @@ def cosine_pairs_lsh(
 ) -> DataFrame:
     """Near-pairs by sign-LSH banding + exact-cosine verification.
 
-    Block-then-verify, the same shape as dedup.minhash_lsh_pairs:
-    candidates come from ``bands`` equi-joins on (band, sig) carrying
-    ONLY (id, band, sig) — the embedding vectors are joined back once
-    per side after candidate dedup, so the banded shuffle never
-    replicates vector payloads.  Every candidate is verified with the
+    Block-then-verify, the same shape as dedup.minhash_lsh_pairs and
+    banded by the same step (``dedup.bands_from_signature`` over the
+    sign bits): candidates come from ``bands`` equi-joins on (band,
+    sig) carrying ONLY (id, band, sig) — the embedding vectors are
+    joined back once per side after candidate dedup, so the banded
+    shuffle never replicates vector payloads.  Every candidate is verified with the
     exact double-precision cosine, so the output is a subset of
     ``cosine_pairs`` — missing a pair only when all bands miss.
 

@@ -520,7 +520,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle = the exact-Jaccard SQL: with independent slot hashes and
     k=128/b=32/r=4 banding, the probability of missing any pair at
-    jac ≥ 0.8 is ≤ 3e-9 per pair, and the candidate verification step
+    jac ≥ 0.8 is ≤ 4.7e-8 per pair, and the candidate verification step
     computes the same integer-ratio jaccard as the exact operator — so
     LSH output ≡ exact output (checked at sf0.001/0.01/0.1; also
     asserted vs dedup_ngram_jaccard in tests/test_dedup.py).
@@ -570,7 +570,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     affordable at all.
 
     Oracle = exact delta×history Jaccard (same certainty argument as
-    dedup_minhash_lsh: miss probability ≤ 3e-9 per true pair at the
+    dedup_minhash_lsh: miss probability ≤ 4.7e-8 per true pair at the
     k=128/b=32 operating point).  Same pid-free overwrite-in-place
     index path contract as the other layout queries.
     """
@@ -3319,7 +3319,7 @@ def pipeline_ingest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage's cost is the component query's cost — composition adds no
     new wide stage (PLANS.md row).  Delta staging + report are exact,
     so the driver hash is exact; the LSH step's miss probability
-    (≤ 3e-9 per true pair at k=128/b=32) is the same certainty
+    (≤ 4.7e-8 per true pair at k=128/b=32) is the same certainty
     argument as dedup_minhash_lsh.
     """
     import hashlib

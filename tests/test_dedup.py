@@ -8,11 +8,14 @@ from pyspark.sql import functions as F
 
 from another_map_reduce_spark.operators.dedup import (
     dedup_exact,
+    incremental_minhash_pairs,
+    lsh_band_index,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
     word_ngrams,
 )
+from another_map_reduce_spark.operators.similarity import signlsh_bands
 from another_map_reduce_spark.sources.tables import load_table
 
 
@@ -101,10 +104,10 @@ def test_containment_max_df_caps_history_side(spark):
 
 
 def test_minhash_lsh_recall_vs_exact(spark, docs):
-    """At jaccard ≥0.8 with k=128,b=16,r=8 the miss probability per pair
-    is ≤(1-0.8^8)^16 ≈ 5%; the planted dups sit near 0.99 where it is
-    ~1e-9 — so expect (near-)full recall and NO false positives (the
-    candidate set is verified with exact Jaccard)."""
+    """At jaccard ≥0.8 with the default k=128,b=32,r=4 the miss
+    probability per pair is ≤(1-0.8^4)^32 ≈ 4.7e-8 — so expect
+    (near-)full recall and NO false positives (the candidate set is
+    verified with exact Jaccard)."""
     exact = {
         (r.d1, r.d2): r.jac
         for r in ngram_jaccard_pairs(docs, threshold=0.8).collect()
@@ -139,6 +142,29 @@ def test_simhash_rejects_unsupported_radius(spark, docs):
     larger radius must fail loudly instead of silently dropping pairs."""
     with pytest.raises(ValueError, match="max_hamming"):
         simhash_pairs(docs, max_hamming=4)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda df, vecs: lsh_band_index(df, k=128, bands=256),  # r = 0
+        lambda df, vecs: minhash_lsh_pairs(df, k=100, bands=32),  # drops 4 slots
+        lambda df, vecs: lsh_band_index(df, bands=0),
+        lambda df, vecs: signlsh_bands(vecs, "vec_id", "embedding", 16, 0),
+    ],
+    ids=["bands_gt_k", "k_not_multiple", "zero_bands", "signlsh_zero_rows"],
+)
+def test_banding_rejects_unusable_shapes(spark, build):
+    """A banding with empty band slices hashes every document to the
+    same key (a silent all-pairs join) and an uneven one drops
+    signature slots: both must raise while the plan is built, before
+    any Spark job runs."""
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="rows per band"):
+        build(df, vecs)
 
 
 def test_max_df_cap_returns_subset(spark, docs):
@@ -366,6 +392,85 @@ def test_incremental_minhash_equals_batch_restriction(spark, sf_dir):
         if (r.d1 % 10 == 0) != (r.d2 % 10 == 0)
     }
     assert inc == cross and inc, (len(inc), len(cross))
+
+
+def _walk(node):
+    """Pre-order nodes of a physical plan (AQE's initial plan when the
+    query has not run)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.initialPlan()
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _walk(children.apply(i))
+
+
+def _plan_nodes(df):
+    return list(_walk(df._jdf.queryExecution().executedPlan()))
+
+
+def _output(node):
+    out = node.output()
+    return [
+        (out.apply(i).name(), out.apply(i).dataType().typeName())
+        for i in range(out.size())
+    ]
+
+
+def _child_cols(node, i):
+    return [c for c, _ in _output(node.children().apply(i))]
+
+
+def test_verify_join_strategies(spark):
+    """Read from the plans without running them: the exact-Jaccard
+    verify joins build their hash table from the candidate pairs, and
+    the incremental probe broadcasts the delta's shingle sets only above
+    the history join.
+
+    The last check (no broadcast of the corpus shingle sets) holds for
+    this tiny corpus only.  The hint binds the first verify join; the
+    second (``d2``) is picked by size estimates and is left unpinned:
+    here it is a sort-merge join, but on larger inputs under the
+    broadcast threshold the planner broadcasts the corpus sets there.
+    The check guards the pinned joins against regressions, not the
+    unpinned one."""
+    df = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 3} jumps over the lazy dog")
+         for i in range(8)],
+        "doc_id long, text string",
+    )
+    hist = df.where(F.col("doc_id") % 2 == 1)
+    delta = df.where(F.col("doc_id") % 2 == 0)
+    batch = _plan_nodes(minhash_lsh_pairs(df))
+    inc = _plan_nodes(
+        incremental_minhash_pairs(hist, delta, lsh_band_index(hist))
+    )
+
+    def cand_build(nodes, cand_cols):
+        return [
+            n for n in nodes
+            if n.nodeName() == "ShuffledHashJoin"
+            and n.buildSide().toString() == "BuildLeft"
+            and _child_cols(n, 0) == cand_cols
+        ]
+
+    assert cand_build(batch, ["d1", "d2"])
+    delta_join = [
+        n for n in inc
+        if n.nodeName() == "BroadcastHashJoin"
+        and n.buildSide().toString() == "BuildRight"
+        and _child_cols(n, 1)[0] == "new_doc"
+        and "array" in dict(_output(n.children().apply(1))).values()
+    ]
+    assert len(delta_join) == 1
+    assert cand_build(_walk(delta_join[0].children().apply(0)),
+                      ["new_doc", "dup_of"])
+    for n in batch + inc:
+        if n.nodeName() == "BroadcastExchange":
+            cols = _output(n)
+            assert cols[0][0] == "new_doc" or all(
+                t != "array" for _, t in cols
+            ), cols
 
 
 def test_triangle_stats_known_graphs(spark):
