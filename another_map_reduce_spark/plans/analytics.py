@@ -25,6 +25,8 @@ ROUNDED value plus a unique key.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -356,6 +358,42 @@ _PR_ITERS = 3
 _PR_DAMP = 0.85
 
 
+@contextmanager
+def _orders_sized_shuffle_partitions(spark: SparkSession, orders: DataFrame):
+    """Run a batch graph job at a shuffle width sized to its edge list,
+    restoring the session's width on exit.
+
+    The width is sized to the DATA, not inherited from the batch
+    session.  The proxy is the orders row count (a metadata-only
+    parquet count): edges ≈ 2·distinct(supp, cust) ≲ 8·|orders|, and
+    ~300k edge rows per partition keeps tasks meaty.  At sf0.1 that
+    gives 8 partitions (~150k rows each; the session's 32-wide default
+    spent more on ~300 task schedulings than on work — measured 8.0 s
+    → 2.4 s on pagerank_suppliers); at the 30x relational replica it
+    gives the full local width back (a fixed 8 underfed 32 cores
+    there: 4.4M rows per partition, wall 66 s → re-widened, see
+    BASELINE).  At real scale the same formula is edge_bytes / target
+    partition size.
+
+    The conf is session-global while the scope is open, and a batch
+    job reads it when it is planned, so callers drive their result to
+    completion inside the scope (an eager checkpoint of the small
+    result); a lazy result would run at the session's width.  Not
+    thread-safe: another job planned on the same session meanwhile
+    sees this width (the registry's serial-harness contract).
+    """
+    from another_map_reduce_spark.session import shuffle_width
+
+    width = max(8, min(shuffle_width(spark), orders.count() // 20_000))
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(width))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _pagerank_oracle(iters: int = _PR_ITERS) -> str:
     """Unrolled-iteration PageRank SQL: recursive CTEs can't aggregate
     in the recursive term (DuckDB/Postgres restriction), but a FIXED
@@ -541,10 +579,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall, BENCH_SCALE_r9rel).  [extension].
     """
     from another_map_reduce_spark.operators.graph import label_propagation
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -573,12 +607,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # Same data-sized shuffle-width override as pagerank_suppliers
-    # (edges ≈ 8·|orders|; eager 20-row checkpoint keeps the narrowed
-    # width from leaking into the caller's session).
-    n_orders = orders.count()
-    width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with _orders_sized_shuffle_partitions(spark, orders):
         labels = label_propagation(edges, iters=_LPA_ITERS)
         top = (
             labels.groupBy(F.col("label").alias("community"))
@@ -668,10 +697,6 @@ def ppr_seed_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     9-digit rounded rank; zero-mass nodes (unreached from the seeds)
     are excluded on both sides.  [extension].
     """
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -700,9 +725,7 @@ def ppr_seed_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    n_orders = orders.count()
-    width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with _orders_sized_shuffle_partitions(spark, orders):
         edges = edges.repartition("src").localCheckpoint(eager=False)
         deg = edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("d")
@@ -819,10 +842,6 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         community_modularity,
         label_propagation,
     )
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -851,9 +870,7 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    n_orders = orders.count()
-    width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with _orders_sized_shuffle_partitions(spark, orders):
         edges = edges.localCheckpoint(eager=False)
         labels = label_propagation(edges, iters=_LPA_ITERS)
         top = (
@@ -927,29 +944,7 @@ def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # Shuffle width sized to the DATA, not inherited from the batch
-    # session (the same discipline the streaming drains apply).  The
-    # proxy is the orders row count (a metadata-only parquet count):
-    # edges ≈ 2·distinct(supp, cust) ≲ 8·|orders|, and ~300k edge
-    # rows per partition keeps tasks meaty.  At sf0.1 that gives 8
-    # partitions (~150k rows each; the session's 32-wide default
-    # spent more on ~300 task schedulings than on work — measured
-    # 8.0 s → 2.4 s); at the 30x relational replica it gives the full
-    # local width back (a fixed 8 underfed 32 cores there: 4.4M rows
-    # per partition, wall 66 s → re-widened, see BASELINE).  At real
-    # scale the same formula is edge_bytes / target partition size.
-    # The whole computation is driven to completion inside the scope
-    # (eager checkpoint of the 20-row result), so the narrowed width
-    # can't leak into the caller's session.
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-
-    n_orders = orders.count()  # metadata-only: parquet row-count stats
-    from another_map_reduce_spark.session import shuffle_width
-
-    width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with _orders_sized_shuffle_partitions(spark, orders):
         ranks = pagerank(edges)
         top = (
             ranks.select(
@@ -1324,7 +1319,7 @@ def zorder_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench/test runs (a pid-keyed path leaked one layout per process).
     # Correct under the serial driver/bench/test harnesses — two
     # processes rewriting the same sf concurrently would race, the same
-    # documented serial-harness contract as _stream_shuffle_partitions.
+    # documented serial-harness contract as _orders_sized_shuffle_partitions.
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = os.path.join(
         tempfile.gettempdir(), f"amrs_zorder_layout_{tag}"
@@ -3162,9 +3157,6 @@ def histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Runtime Bloom-filter join pruning (row-level runtime filter, dim → fact)
 # ---------------------------------------------------------------------------
 
-from contextlib import contextmanager  # noqa: E402
-
-
 @contextmanager
 def _bloom_filter_confs(spark: SparkSession):
     """Scope the confs that let Catalyst inject a runtime Bloom filter
@@ -3173,7 +3165,7 @@ def _bloom_filter_confs(spark: SparkSession):
     don't amortize the build), and it only fires on non-broadcast
     joins, so the dim side must not auto-broadcast.  Restore-on-exit,
     NOT reentrant — same serial driver/bench/test harness contract as
-    _stream_shuffle_partitions."""
+    _orders_sized_shuffle_partitions."""
     keys = {
         "spark.sql.optimizer.runtime.bloomFilter."
         "applicationSideScanSizeThreshold": "0",
@@ -4141,10 +4133,6 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     [extension] — the reference has no graph surface.
     """
     from another_map_reduce_spark.operators.graph import hits
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -4160,9 +4148,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    n_orders = orders.count()
-    width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with _orders_sized_shuffle_partitions(spark, orders):
         hubs, auths = hits(e0, iters=_HITS_ITERS)
 
         def _top(df: DataFrame, kind: str) -> DataFrame:

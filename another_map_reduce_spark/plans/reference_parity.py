@@ -214,12 +214,13 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from another_map_reduce_spark.functions.text import tokenize
     from another_map_reduce_spark.plans.relational import (
+        _DRAIN_WIDTH,
         _fresh_sink_name,
-        _stream_shuffle_partitions,
     )
     from another_map_reduce_spark.sources.pydatasource import (
         register_reftext,
     )
+    from another_map_reduce_spark.streaming.lifecycle import start_stateful
 
     docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -237,15 +238,15 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     qname = _fresh_sink_name("pysource_stream_wordcount")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        counts.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("complete")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return spark.table(qname).orderBy("word")
 
 
@@ -284,12 +285,13 @@ def pysource_stream_sink_roundtrip(
     from pyspark.sql import functions as F
 
     from another_map_reduce_spark.plans.relational import (
+        _DRAIN_WIDTH,
         _events_readstream,
-        _stream_shuffle_partitions,
     )
     from another_map_reduce_spark.sources.pydatasource import (
         register_reftext,
     )
+    from another_map_reduce_spark.streaming.lifecycle import start_stateful
 
     register_reftext(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -301,15 +303,15 @@ def pysource_stream_sink_roundtrip(
     stream = _events_readstream(spark, sf_dir).select(
         "event_type", "user_id"
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.format("reftext")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        stream.writeStream.format("reftext")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
 
     back = spark.read.format("reftext").load(os.path.join(out, "part-*"))
     lines = back.select(

@@ -22,13 +22,15 @@ Cross-engine determinism rules (the DuckDB oracle hash-compares):
 
 from __future__ import annotations
 
-import contextlib as _contextlib
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from another_map_reduce_spark.queries import register
 from another_map_reduce_spark.sources.tables import load_table
+from another_map_reduce_spark.streaming.lifecycle import (
+    process_all_available,
+    start_stateful,
+)
 
 
 # Shared with plans.tpch_extra via functions.aggs (NOT via an
@@ -833,6 +835,11 @@ import itertools as _itertools
 
 _SINK_SEQ = _itertools.count(1)  # count().__next__ is atomic under the GIL
 
+# Stateful width the registry's stream drains start at: the 32 → 8
+# narrowing measured at sf0.1 (see ``start_stateful``).  Rows measured
+# at another width pass their own.
+_DRAIN_WIDTH = 8
+
 
 def _fresh_sink_name(tag: str) -> str:
     """Unique memory-sink view name per invocation.
@@ -844,82 +851,6 @@ def _fresh_sink_name(tag: str) -> str:
     views are tiny aggregate tables bounded by invocations-per-session.
     """
     return f"_amrs_{tag}_{next(_SINK_SEQ)}"
-
-
-def _process_all_available(q, timeout_s: float = 300.0) -> None:
-    """``q.processAllAvailable()`` under a fail-loud watchdog (ADVICE
-    r13): bare processAllAvailable blocks FOREVER if the source or
-    query wedges without failing, silently hanging the whole bench/
-    correctness suite where the old deadline polls raised.  A daemon
-    watchdog stops the query and raises TimeoutError after
-    ``timeout_s`` — same loud-failure property, none of the
-    recentProgress-ring pitfalls the polls had."""
-    import threading
-
-    done = threading.Event()
-    fired = threading.Event()
-
-    def _watch() -> None:
-        if not done.wait(timeout_s):
-            fired.set()
-            try:
-                q.stop()  # unblocks processAllAvailable
-            except Exception:
-                pass
-
-    t = threading.Thread(target=_watch, daemon=True)
-    t.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        done.set()
-    if fired.is_set():
-        raise TimeoutError(
-            f"streaming drain did not go idle within {timeout_s}s "
-            "(watchdog stopped the query)"
-        )
-
-
-@_contextlib.contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Pin the stateful-shuffle width for a streaming drain.
-
-    Every stateful streaming operator instantiates one state store PER
-    shuffle partition PER micro-batch (a stream-stream join holds
-    four); at the session's batch width of 32 that fixed cost dominates
-    a finite drain — measured at sf0.1: the stream-stream join drops
-    11.4 s → 2.7 s, windowed-agg drains ~2x, going 32 → 8 partitions.
-    Results are partition-count independent; only the drain runs under
-    the narrowed width (the conf is read at query START), and the
-    session width is restored for the post-drain batch aggregation.
-    At scale the same knob is sized to state VOLUME per partition —
-    the point is that stateful width is a deliberate choice, not an
-    inherited batch constant.
-
-    NOT reentrant / thread-safe: this mutates the session-global conf
-    for the drain window, so a query planned concurrently on the same
-    session would pick up the narrowed width or race the restore.
-    The driver, bench, and test harnesses all run queries serially,
-    which is the contract this helper assumes; if concurrent drains
-    ever share a session, give each drain its own
-    ``spark.newSession()`` (confs are per-SparkSession clone) instead
-    of flipping the shared value (r4 advisory).
-    """
-    import os
-
-    # Experiment/deployment override (r14): width A/Bs run the same
-    # binary with SPARK_GRAFT_STREAM_WIDTH=<n> instead of editing each
-    # call site; unset (the default) keeps every row's measured
-    # per-call width.  At scale the same env carries the state-volume-
-    # sized production width.
-    n = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", n))
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -983,15 +914,15 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
     qname = _fresh_sink_name("stream_events_hourly")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        windowed.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("complete")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -1048,15 +979,15 @@ def stream_events_hourly_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
     qname = _fresh_sink_name("stream_events_hourly_append")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        windowed.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -1166,15 +1097,15 @@ def stream_buslog_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
     qname = _fresh_sink_name("stream_buslog_events_hourly")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        windowed.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("complete")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -1303,47 +1234,45 @@ def stream_buslog_backlog_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.window("ts", "1 hour").alias("w"), F.col("event_type")
         ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
         qname = _fresh_sink_name("stream_buslog_backlog_drain")
-        with _stream_shuffle_partitions(spark):
-            q = (
-                windowed.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .option(
-                    "checkpointLocation", os.path.join(root, "_ck_consume")
-                )
-                .trigger(processingTime="50 milliseconds")
-                .start()
-            )
-            # Phase barriers by processAllAvailable(), NOT recentProgress
-            # polling (r13): recentProgress is a bounded ring (~100
-            # entries), so on a slow pass the empty 300 ms triggers
-            # accumulated between phases EVICTED the seed batch's entry
-            # and the numInputRows poll undercounted — the loop then
-            # waited tens of extra seconds (measured 11→49 s swings
-            # in-suite; a 100 ms-trigger probe reproduced the eviction
-            # deterministically).  processAllAvailable() blocks until
-            # everything produced SO FAR is committed, which is exactly
-            # the phase contract: seed fully absorbed before the
-            # backlog exists, then the backlog drained.  The offset cap
-            # still bounds every micro-batch, so the ≥3 capped-trigger
-            # drain shape is unchanged; the 50 ms cadence only trims
-            # dead time between capped batches.
+        q = start_stateful(
+            spark,
+            windowed.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("complete")
+            .option("checkpointLocation", os.path.join(root, "_ck_consume"))
+            .trigger(processingTime="50 milliseconds"),
+            width=_DRAIN_WIDTH,
+        )
+        # Phase barriers by processAllAvailable(), NOT recentProgress
+        # polling (r13): recentProgress is a bounded ring (~100
+        # entries), so on a slow pass the empty 300 ms triggers
+        # accumulated between phases EVICTED the seed batch's entry
+        # and the numInputRows poll undercounted — the loop then
+        # waited tens of extra seconds (measured 11→49 s swings
+        # in-suite; a 100 ms-trigger probe reproduced the eviction
+        # deterministically).  processAllAvailable() blocks until
+        # everything produced SO FAR is committed, which is exactly
+        # the phase contract: seed fully absorbed before the
+        # backlog exists, then the backlog drained.  The offset cap
+        # still bounds every micro-batch, so the ≥3 capped-trigger
+        # drain shape is unchanged; the 50 ms cadence only trims
+        # dead time between capped batches.
+        try:
             with phase(spark, _QP, "drain"):
-                _process_all_available(q)  # seed tranche absorbed
+                process_all_available(q)  # seed tranche absorbed
             with phase(spark, _QP, "produce"):
                 _produce(sliced_batch.where(F.col("event_id") % 20 != 0))
             with phase(spark, _QP, "drain"):
-                _process_all_available(q)  # backlog drained
+                process_all_available(q)  # backlog drained
+        finally:
             q.stop()
-            # Contract check on a MONOTONE metric: the complete-mode
-            # sink's Σn counts every consumed event exactly once.
-            consumed_total = (
-                spark.table(qname).agg(F.sum("n")).collect()[0][0] or 0
-            )
-            if consumed_total != n_total:
-                raise RuntimeError(
-                    f"drain consumed {consumed_total} of {n_total}"
-                )
+        # Contract check on a MONOTONE metric: the complete-mode
+        # sink's Σn counts every consumed event exactly once.
+        consumed_total = (
+            spark.table(qname).agg(F.sum("n")).collect()[0][0] or 0
+        )
+        if consumed_total != n_total:
+            raise RuntimeError(f"drain consumed {consumed_total} of {n_total}")
         return (
             spark.table(qname)
             .select(
@@ -1415,15 +1344,15 @@ def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("vol"),
     )
     qname = _fresh_sink_name("stream_ohlc_hourly")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        windowed.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .select(

@@ -20,12 +20,13 @@ from pyspark.sql import functions as F
 # construction (the two rows can't diverge silently).
 import another_map_reduce_spark.plans.relational as _relational  # noqa: F401
 from another_map_reduce_spark.plans.relational import (
+    _DRAIN_WIDTH,
     _events_readstream,
     _fresh_sink_name,
-    _stream_shuffle_partitions,
 )
 from another_map_reduce_spark.queries import ORACLES, register
 from another_map_reduce_spark.sources.tables import load_table
+from another_map_reduce_spark.streaming.lifecycle import start_stateful
 from another_map_reduce_spark.streaming.stateful import funnel_stages
 
 
@@ -54,16 +55,16 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "ts"
     )
     qname = _fresh_sink_name("stream_funnel")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            funnel_stages(raw)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        funnel_stages(raw)
+        .writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("update")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     per_user = (
         spark.table(qname)
         .groupBy("user_id")
@@ -144,16 +145,16 @@ def stream_join_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wins and is STABLE (the r12 "regression" was width-8 store
     # constants amplified by host noise).  At scale the same knob is
     # sized to state volume per partition, not downward.
-    with _stream_shuffle_partitions(spark, n=2):
-        q = (
-            purchases_with_recent_view(purchases, views)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        purchases_with_recent_view(purchases, views)
+        .writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=2,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy(F.col("purchase_id").alias("event_id"))
@@ -200,16 +201,16 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "ts"
     )
     qname = _fresh_sink_name("stream_dedup")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            dedup_stream(raw, ["event_id", "event_type"])
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        dedup_stream(raw, ["event_id", "event_type"])
+        .writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy("event_type")
@@ -253,15 +254,15 @@ def stream_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         static_cust, raw["user_id"] == static_cust["c_custkey"], "inner"
     )
     qname = _fresh_sink_name("stream_static")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        joined.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy(F.col("c_mktsegment").alias("mktsegment"))
@@ -322,15 +323,15 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     qname = _fresh_sink_name("stream_sliding")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        windowed.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .select(F.col("win.start").alias("win_start"), "event_type", "n")
@@ -413,17 +414,17 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged.write.mode("overwrite").parquet(state)
 
-    with _stream_shuffle_partitions(spark):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(_merge)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
 
     dec = F.col("value").cast("decimal(38,6)")
     return (
@@ -661,24 +662,24 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     qname = _fresh_sink_name("stream_late_accounting")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dropped_windows = 0
-        data_batches = 0
-        for p in q.recentProgress:
-            obj = json.loads(p.json) if hasattr(p, "json") else p
-            if obj.get("numInputRows", 0) > 0:
-                data_batches += 1
-            for op in obj.get("stateOperators", []):
-                dropped_windows += op.get("numRowsDroppedByWatermark", 0)
+    q = start_stateful(
+        spark,
+        windowed.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
+    dropped_windows = 0
+    data_batches = 0
+    for p in q.recentProgress:
+        obj = json.loads(p.json) if hasattr(p, "json") else p
+        if obj.get("numInputRows", 0) > 0:
+            data_batches += 1
+        for op in obj.get("stateOperators", []):
+            dropped_windows += op.get("numRowsDroppedByWatermark", 0)
 
     # lost INPUT rows: the b2 slice against the LATE-DATA FILTER
     # watermark in force for that batch — Spark filters late input
@@ -766,16 +767,16 @@ def stream_join_outer_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts"
     )
     qname = _fresh_sink_name("stream_join_outer")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            purchases_with_view_outer(purchases, views)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        purchases_with_view_outer(purchases, views)
+        .writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy(F.col("purchase_id").alias("event_id"))
@@ -889,20 +890,20 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("w.start").alias("hour"), "event_type", "n", "sum_value"
             )
         )
-        q = (
+        q = start_stateful(
+            spark,
             windowed.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            width=_DRAIN_WIDTH,
         )
         q.awaitTermination()
 
-    with _stream_shuffle_partitions(spark):
-        _run()  # run 1: slice A only
-        ev.where(F.col("ts") >= lit_cut).write.mode("append").parquet(src)
-        _run()  # run 2: a NEW query recovers from the checkpoint
+    _run()  # run 1: slice A only
+    ev.where(F.col("ts") >= lit_cut).write.mode("append").parquet(src)
+    _run()  # run 2: a NEW query recovers from the checkpoint
 
     return (
         spark.read.parquet(sink)
@@ -985,16 +986,16 @@ def stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts"
     )
     qname = _fresh_sink_name("stream_join_full")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            purchases_with_view_full(purchases, views)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        purchases_with_view_full(purchases, views)
+        .writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     out = spark.table(qname)
     p_side = (
         out.where(F.col("purchase_id").isNotNull())
@@ -1068,15 +1069,15 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw, gap="30 minutes", watermark="30 minutes", ts_col="ts"
     )
     qname = _fresh_sink_name("stream_sessions")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = start_stateful(
+        spark,
+        sessions.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(availableNow=True),
+        width=_DRAIN_WIDTH,
+    )
+    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -1252,23 +1253,23 @@ def stream_session_close_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         # worst in every paired round; 8 ≈ 16 with fewer RocksDB opens.
         # At scale the knob sizes to keys-per-partition × per-key
         # Python cost, not downward.
-        with _stream_shuffle_partitions(spark, 8):
-            stream = session_close_v2(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                gap_minutes=_TWS_GAP_MS // 60_000,
-                watermark=f"{_TWS_DELAY_MS // 60_000} minutes",
-            )
-            q = (
-                stream.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        stream = session_close_v2(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            gap_minutes=_TWS_GAP_MS // 60_000,
+            watermark=f"{_TWS_DELAY_MS // 60_000} minutes",
+        )
+        q = start_stateful(
+            spark,
+            stream.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("append")
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True),
+            width=8,
+        )
+        q.awaitTermination()
     finally:
         if prev is None:
             spark.conf.unset(provider_key)
@@ -1355,33 +1356,31 @@ def _run_rate_soak(
     # would lose its early plateau, exactly the half the flatness
     # assertion compares against)
     samples: dict[int, int] = {}
-    with _stream_shuffle_partitions(spark, 4):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = time.monotonic() + timeout_s
-            while True:
-                lp = q.lastProgress
-                if lp and lp.get("stateOperators"):
-                    samples[lp["batchId"]] = lp["stateOperators"][0][
-                        "numRowsTotal"
-                    ]
-                if lp and lp["batchId"] >= min_batches:
-                    break
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"rate soak did not reach batch {min_batches} "
-                        f"in {timeout_s}s (at "
-                        f"{lp['batchId'] if lp else None})"
-                    )
-                time.sleep(0.05)
-        finally:
-            q.stop()
+    q = start_stateful(
+        spark,
+        agg.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .trigger(processingTime="0 seconds"),
+        width=4,
+    )
+    try:
+        deadline = time.monotonic() + timeout_s
+        while True:
+            lp = q.lastProgress
+            if lp and lp.get("stateOperators"):
+                samples[lp["batchId"]] = lp["stateOperators"][0]["numRowsTotal"]
+            if lp and lp["batchId"] >= min_batches:
+                break
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"rate soak did not reach batch {min_batches} "
+                    f"in {timeout_s}s (at "
+                    f"{lp['batchId'] if lp else None})"
+                )
+            time.sleep(0.05)
+    finally:
+        q.stop()
     return qname, sorted(samples.items())
 
 

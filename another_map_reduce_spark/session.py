@@ -9,9 +9,13 @@ set here once, tuned for scale-out:
   replaces the reference's static task list (`src/coordinator.rs:216-230`).
 * Arrow on — every Python-side operator in this package moves data in
   Arrow batches, never row-at-a-time.
-* ``spark.sql.shuffle.partitions`` ≙ the reference's ``num_buckets``;
-  with AQE enabled this is an upper bound that AQE coalesces down from,
-  so a large value is safe on a big cluster and cheap locally.
+* ``spark.sql.shuffle.partitions`` ≙ the reference's ``num_buckets``.
+  For batch jobs, with AQE enabled, this is an upper bound that AQE
+  coalesces down from, so a large value is safe on a big cluster and
+  cheap locally.  That holds for batch only: a stateful streaming query
+  opens one state store per shuffle partition in every micro-batch and
+  is never coalesced, so streaming queries start through
+  ``streaming.lifecycle.start_stateful``, which fixes their own width.
 """
 
 from __future__ import annotations
@@ -38,8 +42,11 @@ def get_spark(
 
     ``shuffle_partitions`` plays the role of the reference's
     ``-n num_buckets`` (`/root/reference/src/main.rs:21-24`): the number of
-    reduce-side partitions.  Unlike the reference, AQE may coalesce below
-    it at runtime when partitions are small.
+    reduce-side partitions.  Unlike the reference, AQE may coalesce a
+    batch job below it at runtime when partitions are small.  Stateful
+    streaming queries do not inherit it: they start through
+    ``start_stateful`` (``streaming/lifecycle.py``), which fixes their
+    width at start.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS

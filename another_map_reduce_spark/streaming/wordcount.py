@@ -19,6 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from another_map_reduce_spark.functions.text import tokenize
+from another_map_reduce_spark.streaming.lifecycle import (
+    process_all_available,
+    start_stateful,
+)
 
 
 def streaming_word_count(
@@ -40,14 +44,19 @@ def streaming_word_count(
 def run_to_memory(stream_df: DataFrame, table_name: str, mode: str = "complete"):
     """Drain all available input into an in-memory sink (test harness).
 
-    Returns the StreamingQuery (already processed-all + stopped).
+    The query starts at the default stateful width
+    (``lifecycle.start_stateful``) and drains under the fail-loud
+    watchdog.  Returns the StreamingQuery, processed-all and stopped;
+    it is stopped on failure too.
     """
-    q = (
+    q = start_stateful(
+        stream_df.sparkSession,
         stream_df.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode(mode)
-        .start()
+        .outputMode(mode),
     )
-    q.processAllAvailable()
-    q.stop()
+    try:
+        process_all_available(q)
+    finally:
+        q.stop()
     return q

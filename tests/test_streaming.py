@@ -22,23 +22,59 @@ from another_map_reduce_spark.streaming.windows import (
 
 
 def test_streaming_wordcount_matches_batch(spark, tmp_path):
+    """Streaming counts equal batch counts.  Two queries started from two
+    threads while the session's batch width is 32 each run at one state
+    store per core, and the session still reads 32 afterwards."""
+    import threading
+
     d = tmp_path / "texts"
     d.mkdir()
     (d / "a.txt").write_text("spark streams words, words stream")
     (d / "b.txt").write_text("and MORE words!")
 
-    stream = streaming_word_count(spark, str(d))
-    assert stream.isStreaming
-    run_to_memory(stream, "wc_stream", mode="complete")
-    got = {
-        r.word: r.cnt for r in spark.sql("SELECT * FROM wc_stream").collect()
-    }
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    queries, errors = {}, []
+
+    def drain(name):
+        try:
+            stream = streaming_word_count(spark, str(d))
+            assert stream.isStreaming
+            queries[name] = run_to_memory(stream, name, mode="complete")
+        except BaseException as e:  # surfaced in the main thread
+            errors.append(e)
+
+    spark.conf.set(key, "32")
+    try:
+        threads = [
+            threading.Thread(target=drain, args=(name,))
+            for name in ("wc_stream", "wc_stream_2")
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert spark.conf.get(key) == "32"
+    finally:
+        spark.conf.set(key, prev)
+    if errors:
+        raise errors[0]
 
     batch = word_count(
         spark.read.text(str(d)).select(F.col("value").alias("text"))
     )
     expected = {r.word: r.cnt for r in batch.collect()}
-    assert got == expected
+    for name, q in queries.items():
+        progress = [p for p in q.recentProgress if p.stateOperators]
+        assert (
+            progress[-1].stateOperators[0].numShufflePartitions
+            == spark.sparkContext.defaultParallelism
+        )
+        got = {
+            r.word: r.cnt
+            for r in spark.sql(f"SELECT * FROM {name}").collect()
+        }
+        assert got == expected
 
 
 def test_streaming_incremental_update(spark, tmp_path):
@@ -394,9 +430,10 @@ def test_stateful_restart_from_checkpoint(spark, tmp_path):
     """Stop a stateful query mid-stream and restart it from its
     checkpoint: per-key state (the funnel stage machine) carries over —
     a click arriving AFTER the restart still chains onto the view seen
-    BEFORE it."""
+    BEFORE it — and so does the stateful width the first start fixed."""
     import pandas as pd
 
+    from another_map_reduce_spark.streaming.lifecycle import start_stateful
     from another_map_reduce_spark.streaming.stateful import funnel_stages
 
     src = tmp_path / "funnel_ckpt_src"
@@ -418,31 +455,35 @@ def test_stateful_restart_from_checkpoint(spark, tmp_path):
 
     seen: list = []
 
-    def start():
+    def start(width=None):
         # memory sink can't recover from a checkpoint; foreachBatch can.
-        return (
+        return start_stateful(
+            spark,
             funnel_stages(spark.readStream.schema(schema).parquet(str(src)))
             .writeStream.foreachBatch(
                 lambda df, _epoch: seen.extend(df.collect())
             )
             .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .start()
+            .option("checkpointLocation", ckpt),
+            width=width,
         )
 
-    q = start()
+    q = start(width=2)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
 
-    # restart: new events must fold into state recovered from checkpoint
+    # restart: new events must fold into state recovered from checkpoint,
+    # at the width the checkpoint fixed, not the (wider) default
     write_batch("b2.parquet", [(1, "click", 10), (2, "purchase", 11)])
     q = start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+    progress = [p for p in q.recentProgress if p.stateOperators]
+    assert progress[-1].stateOperators[0].numShufflePartitions == 2
     got: dict[int, int] = {}
     for r in seen:
         got[r.user_id] = max(got.get(r.user_id, 0), r.stage_idx)
@@ -741,9 +782,10 @@ def test_transform_with_state_list_and_map_state(spark, tmp_path):
 
 
 def test_stream_drain_restores_shuffle_width(spark, sf_dir):
-    """The narrowed stateful-drain width must not leak into the
-    session: spark.sql.shuffle.partitions is restored after the
-    streaming query drains."""
+    """A registry stream row's stateful width must not leak into the
+    session: start_stateful restores spark.sql.shuffle.partitions as
+    soon as the query has started, so it reads the same after the
+    drain."""
     from another_map_reduce_spark.queries import QUERIES
 
     key = "spark.sql.shuffle.partitions"
