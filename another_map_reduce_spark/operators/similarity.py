@@ -283,10 +283,6 @@ def cosine_pairs_lsh(
 # ---------------------------------------------------------------------------
 
 
-def _lit_vec(vals: list[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in vals])
-
-
 def _lit_matrix(rows: list[list[float]]) -> Column:
     """Constant array<array<double>> via ONE parsed SQL expression.
 

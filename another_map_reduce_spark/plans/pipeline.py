@@ -3341,6 +3341,7 @@ def pipeline_ingest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from another_map_reduce_spark.sources.pydatasource import (
         register_reftext,
     )
+    from another_map_reduce_spark.streaming.lifecycle import drain
 
     docs = load_table(spark, sf_dir, "documents")
     hist = docs.where(F.col("doc_id") % 10 != 0)
@@ -3366,7 +3367,7 @@ def pipeline_ingest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1. INGEST — drop dir is rebuilt per run and drained through the
     # connector into parquet staging (fresh checkpoint ⇒ full drain;
     # pid-free paths, serial-harness contract).  The drain is a pure
-    # passthrough (no stateful operator), so no width pinning needed.
+    # passthrough (no stateful operator), so the default width serves.
     root = os.path.join(tempfile.gettempdir(), f"amrs_pipe_ingest_{tag}")
     shutil.rmtree(root, ignore_errors=True)
     drop = os.path.join(root, "drop")
@@ -3379,14 +3380,12 @@ def pipeline_ingest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.format("reftext").load(
         os.path.join(drop, "part-*")
     )
-    q = (
+    drain(
+        spark,
         stream.writeStream.format("parquet")
         .option("path", staged)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
     )
-    q.awaitTermination()
     lines = (
         spark.read.parquet(staged)
         .select(F.explode(F.split("text", "\n")).alias("line"))

@@ -220,7 +220,7 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from another_map_reduce_spark.sources.pydatasource import (
         register_reftext,
     )
-    from another_map_reduce_spark.streaming.lifecycle import start_stateful
+    from another_map_reduce_spark.streaming.lifecycle import drain
 
     docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -238,15 +238,13 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     qname = _fresh_sink_name("pysource_stream_wordcount")
-    q = start_stateful(
+    drain(
         spark,
         counts.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True),
+        .outputMode("complete"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return spark.table(qname).orderBy("word")
 
 
@@ -291,7 +289,7 @@ def pysource_stream_sink_roundtrip(
     from another_map_reduce_spark.sources.pydatasource import (
         register_reftext,
     )
-    from another_map_reduce_spark.streaming.lifecycle import start_stateful
+    from another_map_reduce_spark.streaming.lifecycle import drain
 
     register_reftext(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -303,15 +301,13 @@ def pysource_stream_sink_roundtrip(
     stream = _events_readstream(spark, sf_dir).select(
         "event_type", "user_id"
     )
-    q = start_stateful(
+    drain(
         spark,
         stream.writeStream.format("reftext")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
+        .option("checkpointLocation", ckpt),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
 
     back = spark.read.format("reftext").load(os.path.join(out, "part-*"))
     lines = back.select(

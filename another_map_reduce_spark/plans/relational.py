@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from another_map_reduce_spark.queries import register
 from another_map_reduce_spark.sources.tables import load_table
 from another_map_reduce_spark.streaming.lifecycle import (
+    drain,
     process_all_available,
     start_stateful,
 )
@@ -914,15 +915,13 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
     qname = _fresh_sink_name("stream_events_hourly")
-    q = start_stateful(
+    drain(
         spark,
         windowed.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True),
+        .outputMode("complete"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -979,15 +978,13 @@ def stream_events_hourly_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
     qname = _fresh_sink_name("stream_events_hourly_append")
-    q = start_stateful(
+    drain(
         spark,
         windowed.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -1064,16 +1061,14 @@ def stream_buslog_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").cast("string").alias("key"),
             F.to_json(F.struct("event_type", "value")).alias("value"),
         )
-        q = (
+        drain(
+            spark,
             wire.writeStream.format("buslog")
             .option("path", root)
             .option("topic", "events")
             .option("numPartitions", "8")
-            .option("checkpointLocation", os.path.join(root, "_produce_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(root, "_produce_ckpt")),
         )
-        q.awaitTermination()
 
     ensure_artifact(
         root,
@@ -1097,15 +1092,13 @@ def stream_buslog_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
     qname = _fresh_sink_name("stream_buslog_events_hourly")
-    q = start_stateful(
+    drain(
         spark,
         windowed.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True),
+        .outputMode("complete"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -1344,15 +1337,13 @@ def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("vol"),
     )
     qname = _fresh_sink_name("stream_ohlc_hourly")
-    q = start_stateful(
+    drain(
         spark,
         windowed.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .select(

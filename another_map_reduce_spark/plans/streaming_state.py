@@ -26,7 +26,7 @@ from another_map_reduce_spark.plans.relational import (
 )
 from another_map_reduce_spark.queries import ORACLES, register
 from another_map_reduce_spark.sources.tables import load_table
-from another_map_reduce_spark.streaming.lifecycle import start_stateful
+from another_map_reduce_spark.streaming.lifecycle import drain, start_stateful
 from another_map_reduce_spark.streaming.stateful import funnel_stages
 
 
@@ -55,16 +55,14 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "ts"
     )
     qname = _fresh_sink_name("stream_funnel")
-    q = start_stateful(
+    drain(
         spark,
         funnel_stages(raw)
         .writeStream.format("memory")
         .queryName(qname)
-        .outputMode("update")
-        .trigger(availableNow=True),
+        .outputMode("update"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     per_user = (
         spark.table(qname)
         .groupBy("user_id")
@@ -145,16 +143,14 @@ def stream_join_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wins and is STABLE (the r12 "regression" was width-8 store
     # constants amplified by host noise).  At scale the same knob is
     # sized to state volume per partition, not downward.
-    q = start_stateful(
+    drain(
         spark,
         purchases_with_recent_view(purchases, views)
         .writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=2,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy(F.col("purchase_id").alias("event_id"))
@@ -201,16 +197,14 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "ts"
     )
     qname = _fresh_sink_name("stream_dedup")
-    q = start_stateful(
+    drain(
         spark,
         dedup_stream(raw, ["event_id", "event_type"])
         .writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy("event_type")
@@ -254,15 +248,13 @@ def stream_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         static_cust, raw["user_id"] == static_cust["c_custkey"], "inner"
     )
     qname = _fresh_sink_name("stream_static")
-    q = start_stateful(
+    drain(
         spark,
         joined.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy(F.col("c_mktsegment").alias("mktsegment"))
@@ -323,15 +315,13 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     qname = _fresh_sink_name("stream_sliding")
-    q = start_stateful(
+    drain(
         spark,
         windowed.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .select(F.col("win.start").alias("win_start"), "event_type", "n")
@@ -414,17 +404,15 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged.write.mode("overwrite").parquet(state)
 
-    q = start_stateful(
+    drain(
         spark,
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
+        .option("checkpointLocation", ckpt),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
 
     dec = F.col("value").cast("decimal(38,6)")
     return (
@@ -662,16 +650,14 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     qname = _fresh_sink_name("stream_late_accounting")
-    q = start_stateful(
+    q = drain(
         spark,
         windowed.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True),
+        .option("checkpointLocation", os.path.join(root, "ckpt")),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     dropped_windows = 0
     data_batches = 0
     for p in q.recentProgress:
@@ -767,16 +753,14 @@ def stream_join_outer_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts"
     )
     qname = _fresh_sink_name("stream_join_outer")
-    q = start_stateful(
+    drain(
         spark,
         purchases_with_view_outer(purchases, views)
         .writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .groupBy(F.col("purchase_id").alias("event_id"))
@@ -890,16 +874,14 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("w.start").alias("hour"), "event_type", "n", "sum_value"
             )
         )
-        q = start_stateful(
+        drain(
             spark,
             windowed.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True),
+            .outputMode("append"),
             width=_DRAIN_WIDTH,
         )
-        q.awaitTermination()
 
     _run()  # run 1: slice A only
     ev.where(F.col("ts") >= lit_cut).write.mode("append").parquet(src)
@@ -986,16 +968,14 @@ def stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts"
     )
     qname = _fresh_sink_name("stream_join_full")
-    q = start_stateful(
+    drain(
         spark,
         purchases_with_view_full(purchases, views)
         .writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     out = spark.table(qname)
     p_side = (
         out.where(F.col("purchase_id").isNotNull())
@@ -1069,15 +1049,13 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw, gap="30 minutes", watermark="30 minutes", ts_col="ts"
     )
     qname = _fresh_sink_name("stream_sessions")
-    q = start_stateful(
+    drain(
         spark,
         sessions.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
         width=_DRAIN_WIDTH,
     )
-    q.awaitTermination()
     return (
         spark.table(qname)
         .select(
@@ -1106,7 +1084,7 @@ _TWS_DELAY_MS = 30 * 60 * 1000
 # user's one pending timer slides to last_ts + gap), THEN timers with
 # expiry <= the batch's eviction watermark fire (inclusive comparator);
 # the eviction watermark in force during batch k is max(ts through
-# batch k-1) - delay; and availableNow runs one final no-data flush
+# batch k-1) - delay; and AvailableNow runs one final no-data flush
 # batch whose watermark covers the last file.  With a ts-monotone
 # 3-way relay there are exactly three firing opportunities (batch 2,
 # batch 3, flush), so per-user state reduces to the per-slice maxima
@@ -1147,7 +1125,7 @@ WITH per_user AS (
   UNION ALL
   SELECT user_id, last3 + {_TWS_GAP_MS} FROM s3 WHERE fire3
   UNION ALL
-  -- final availableNow flush batch: watermark covers the last file
+  -- final AvailableNow flush batch: watermark covers the last file
   SELECT user_id, last3 + {_TWS_GAP_MS} FROM s3
   WHERE NOT fire3 AND last3 + {_TWS_GAP_MS} <= wf
 )
@@ -1178,7 +1156,7 @@ def stream_session_close_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle replays the exact micro-batch schedule in SQL (see
     _TWS_SQL); the hash match pins the input-before-timers order, the
-    inclusive fire comparator, the final availableNow flush batch, and
+    inclusive fire comparator, the final AvailableNow flush batch, and
     the ms flooring of both timers and watermarks.  [extension]
     """
     import hashlib
@@ -1237,44 +1215,34 @@ def stream_session_close_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     schema = spark.read.parquet(src).schema
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, ROCKSDB_PROVIDER)
     qname = _fresh_sink_name("stream_tws_close")
-    try:
-        # Width 8 (r14 — VERDICT r13 #3, reversing the r12 narrowing to
-        # 4): unlike the JVM-stateful drains, TWS runs a PYTHON state
-        # machine serially over each partition's keys every batch, so
-        # the drain is Python-compute-bound, not store-constant-bound —
-        # width parallelises it.  Interleaved A/B at sf0.1 (fresh JVM,
-        # medians-of-3, 3 rounds + 2 from the 3-row matrix): width 4 =
-        # [46.3, 28.1, 23.0, 17.3, 18.5], width 8 = [10.2, 18.9, 10.2,
-        # 15.5, 10.2], width 16 = [17.9, 15.0, 8.3] — width 4 is the
-        # worst in every paired round; 8 ≈ 16 with fewer RocksDB opens.
-        # At scale the knob sizes to keys-per-partition × per-key
-        # Python cost, not downward.
-        stream = session_close_v2(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            gap_minutes=_TWS_GAP_MS // 60_000,
-            watermark=f"{_TWS_DELAY_MS // 60_000} minutes",
-        )
-        q = start_stateful(
-            spark,
-            stream.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True),
-            width=8,
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
+    # Width 8 (r14 — VERDICT r13 #3, reversing the r12 narrowing to
+    # 4): unlike the JVM-stateful drains, TWS runs a PYTHON state
+    # machine serially over each partition's keys every batch, so
+    # the drain is Python-compute-bound, not store-constant-bound —
+    # width parallelises it.  Interleaved A/B at sf0.1 (fresh JVM,
+    # medians-of-3, 3 rounds + 2 from the 3-row matrix): width 4 =
+    # [46.3, 28.1, 23.0, 17.3, 18.5], width 8 = [10.2, 18.9, 10.2,
+    # 15.5, 10.2], width 16 = [17.9, 15.0, 8.3] — width 4 is the
+    # worst in every paired round; 8 ≈ 16 with fewer RocksDB opens.
+    # At scale the knob sizes to keys-per-partition × per-key
+    # Python cost, not downward.
+    stream = session_close_v2(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        gap_minutes=_TWS_GAP_MS // 60_000,
+        watermark=f"{_TWS_DELAY_MS // 60_000} minutes",
+    )
+    drain(
+        spark,
+        stream.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(root, "ckpt")),
+        width=8,
+        provider=ROCKSDB_PROVIDER,
+    )
     return (
         spark.table(qname)
         .select(
@@ -1325,7 +1293,7 @@ def _run_rate_soak(
 ):
     """Drive the deterministic rate-micro-batch windowed aggregation
     for at least ``min_batches`` micro-batches under a real
-    processing-time trigger (NOT availableNow — this is the
+    processing-time trigger (NOT AvailableNow — this is the
     steady-state cadence every other streaming row's finite drain
     skips), then stop.  Returns (memory-sink view name, sorted
     (batchId, state numRowsTotal) samples collected while polling)."""

@@ -330,7 +330,7 @@ class _BusLogStreamReader(DataSourceStreamReader):
     the committed offset (re-reads → duplicates), which is strictly
     worse than one oversized batch.  Capping is exact from the second
     trigger on (partitions() teaches the reader the authoritative
-    checkpointed position).  Under trigger(availableNow=...) Spark
+    checkpointed position).  Under Trigger.AvailableNow Spark
     latches latestOffset once, so the cap never engages — use a
     processingTime trigger to drain a backlog in bounded steps.
 

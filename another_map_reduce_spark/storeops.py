@@ -508,12 +508,3 @@ def gc_consumed_deltas(group: str, members: list[str]) -> None:
         applies = _read_applies(d)
         if all(applies.get(m) != gens[m] for m in members):
             shutil.rmtree(d, ignore_errors=True)
-
-
-def reset_group(group: str, members: list[str]) -> None:
-    """Forget a delta group's state ahead of a from-scratch rebuild:
-    every member's generations/pointer/tombstones plus the delta
-    root."""
-    for m in members:
-        reset_table(_member_table(group, m))
-    shutil.rmtree(_delta_root(group), ignore_errors=True)

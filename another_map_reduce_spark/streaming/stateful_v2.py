@@ -295,8 +295,8 @@ def session_close_v2(
 def funnel_stages_v2(events: DataFrame) -> DataFrame:
     """``funnel_stages`` through transformWithStateInPandas.
 
-    Caller must run the stream on a session configured with the
-    RocksDB state store provider (``ROCKSDB_PROVIDER``) — the new API
+    Caller must start the stream with the RocksDB state store provider
+    (``lifecycle.drain(..., provider=ROCKSDB_PROVIDER)``) — the new API
     refuses the default HDFS-backed provider.
     """
     ensure_protobuf(events.sparkSession)

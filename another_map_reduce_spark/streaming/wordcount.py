@@ -19,10 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from another_map_reduce_spark.functions.text import tokenize
-from another_map_reduce_spark.streaming.lifecycle import (
-    process_all_available,
-    start_stateful,
-)
+from another_map_reduce_spark.streaming.lifecycle import drain
 
 
 def streaming_word_count(
@@ -42,21 +39,16 @@ def streaming_word_count(
 
 
 def run_to_memory(stream_df: DataFrame, table_name: str, mode: str = "complete"):
-    """Drain all available input into an in-memory sink (test harness).
+    """Drain all available input into the in-memory sink ``table_name``.
 
-    The query starts at the default stateful width
-    (``lifecycle.start_stateful``) and drains under the fail-loud
-    watchdog.  Returns the StreamingQuery, processed-all and stopped;
-    it is stopped on failure too.
+    This is the drain perfbench's ``stream_wordcount`` times, and the
+    tests' harness.  ``lifecycle.drain`` runs it: default stateful
+    width, bounded wait.  Returns the stopped StreamingQuery, whose
+    ``recentProgress`` holds the micro-batch metrics.
     """
-    q = start_stateful(
+    return drain(
         stream_df.sparkSession,
         stream_df.writeStream.format("memory")
         .queryName(table_name)
         .outputMode(mode),
     )
-    try:
-        process_all_available(q)
-    finally:
-        q.stop()
-    return q

@@ -19,6 +19,7 @@ from another_map_reduce_spark.sources.buslog import (
     produce,
     register_buslog,
 )
+from another_map_reduce_spark.streaming.lifecycle import drain
 
 
 def _mk_topic(tmp_path, n_per=5):
@@ -68,25 +69,23 @@ def test_stream_resumes_from_committed_offsets(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
-    def drain():
-        q = (
+    def consume():
+        drain(
+            spark,
             spark.readStream.format("buslog")
             .option("path", root)
             .option("topic", "t")
             .load()
             .writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
 
-    drain()
+    consume()
     n1 = spark.read.parquet(out).count()
     assert n1 == 15
     produce(root, "t", 1, [(7_000_000, "k1", "new-a"), (7_100_000, "k1", "new-b")])
-    drain()
+    consume()
     got = spark.read.parquet(out)
     assert got.count() == 17  # only the 2 new records arrived
     news = {r.value for r in got.where(F.col("offset") >= 5).collect()}
@@ -193,21 +192,19 @@ def test_retention_truncate_before_and_log_start(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
     out = str(tmp_path / "out")
 
-    def drain():
-        q = (
+    def consume():
+        drain(
+            spark,
             spark.readStream.format("buslog")
             .option("path", root)
             .option("topic", "t")
             .load()
             .writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
 
-    drain()
+    consume()
     assert spark.read.parquet(out).count() == 15
 
     # cutoff mid-segment-2 (offset 8): only segment 1 (0-4) deletable
@@ -229,18 +226,16 @@ def test_retention_truncate_before_and_log_start(spark, tmp_path):
 
     # fresh consumer (no checkpoint) starts at log-start
     out2, ckpt2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
-    q = (
+    drain(
+        spark,
         spark.readStream.format("buslog")
         .option("path", root)
         .option("topic", "t")
         .load()
         .writeStream.format("parquet")
         .option("path", out2)
-        .option("checkpointLocation", ckpt2)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt2),
     )
-    q.awaitTermination()
     assert spark.read.parquet(out2).count() == 10
 
     # the ORIGINAL consumer already committed offset 15; retention past
@@ -248,7 +243,7 @@ def test_retention_truncate_before_and_log_start(spark, tmp_path):
     truncate_before(root, "t", {0: 100})  # cutoff beyond the log end
     assert log_start_offsets(root, "t") == {0: 15}
     produce(root, "t", 0, [(99_000, "k", "after-retention")])
-    drain()
+    consume()
     got = spark.read.parquet(out)
     assert got.count() == 16
     assert {r.value for r in got.where(F.col("offset") == 15).collect()} == {

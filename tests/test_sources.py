@@ -2,6 +2,7 @@ from __future__ import annotations
 
 from another_map_reduce_spark.sources.tables import TABLES, load_table, register_views
 from another_map_reduce_spark.sources.text import read_text_corpus
+from another_map_reduce_spark.streaming.lifecycle import drain
 
 
 def test_all_tables_load(spark, sf_dir):
@@ -198,20 +199,18 @@ def test_reftext_stream_reader_incremental_offsets(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
-    def drain():
-        q = (
+    def consume():
+        drain(
+            spark,
             spark.readStream.format("reftext")
             .load(str(d / "*.txt"))
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
         )
-        q.awaitTermination()
 
-    drain()
+    consume()
     first = {
         (r.path.rsplit("/", 1)[-1], r.text)
         for r in spark.read.parquet(out).collect()
@@ -219,7 +218,7 @@ def test_reftext_stream_reader_incremental_offsets(spark, tmp_path):
     assert first == {("a.txt", "alpha"), ("b.txt", "beta")}
 
     (d / "c.txt").write_text("gamma")
-    drain()
+    consume()
     rows = [
         (r.path.rsplit("/", 1)[-1], r.text)
         for r in spark.read.parquet(out).collect()
@@ -249,25 +248,23 @@ def test_reftext_stream_writer_batched_atomic(spark, tmp_path):
     out.mkdir()
     ckpt = str(tmp_path / "ckpt")
 
-    def drain():
-        q = (
+    def consume():
+        drain(
+            spark,
             spark.readStream.format("reftext")
             .load(str(src / "*.txt"))
             .writeStream.format("reftext")
             .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
 
-    drain()
+    consume()
     first = sorted(p.name for p in out.glob("part-*.txt"))
     assert first and all(n.startswith("part-") for n in first)
     assert not (out / "_temporary").exists()
 
     (src / "b.txt").write_text("three")
-    drain()
+    consume()
     names = sorted(p.name for p in out.glob("part-*.txt"))
     assert set(first) <= set(names) and len(names) > len(first)
     text = " ".join(

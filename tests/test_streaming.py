@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from another_map_reduce_spark.operators.wordcount import word_count
 from another_map_reduce_spark.sources.tables import load_table
+from another_map_reduce_spark.streaming.lifecycle import drain
 from another_map_reduce_spark.streaming.wordcount import (
     run_to_memory,
     streaming_word_count,
@@ -19,6 +20,8 @@ from another_map_reduce_spark.streaming.windows import (
     sliding_agg,
     tumbling_agg,
 )
+
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
 
 def test_streaming_wordcount_matches_batch(spark, tmp_path):
@@ -347,8 +350,7 @@ def _assert_funnel_stream_matches_batch(
     funnel_fn,
     qname,
     n_files=1,
-    conf=None,
-    available_now=False,
+    provider=None,
 ):
     """Shared scaffold for the streaming-funnel ≡ batch assertions:
     feed the events table (event-time order, split over ``n_files``
@@ -369,40 +371,23 @@ def _assert_funnel_stream_matches_batch(
     for i in range(n_files):
         ev.iloc[i * step : (i + 1) * step].to_parquet(d / f"b{i}.parquet")
     schema = spark.read.parquet(str(d)).schema
-    prev_conf = {}
-    for k, v in (conf or {}).items():
-        prev_conf[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        stream = funnel_fn(spark.readStream.schema(schema).parquet(str(d)))
-        writer = (
-            stream.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        try:
-            if available_now:
-                q.awaitTermination()
-            else:
-                q.processAllAvailable()
-            final = {
-                r.user_id: r.stage_idx
-                for r in spark.sql(
-                    "SELECT user_id, max(stage_idx) AS stage_idx"
-                    f" FROM {qname} GROUP BY user_id"
-                ).collect()
-            }
-        finally:
-            q.stop()
-    finally:
-        for k, v in prev_conf.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    before = spark.conf.get(_PROVIDER_KEY, None)
+    drain(
+        spark,
+        funnel_fn(spark.readStream.schema(schema).parquet(str(d)))
+        .writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("update"),
+        provider=provider,
+    )
+    assert spark.conf.get(_PROVIDER_KEY, None) == before
+    final = {
+        r.user_id: r.stage_idx
+        for r in spark.sql(
+            "SELECT user_id, max(stage_idx) AS stage_idx"
+            f" FROM {qname} GROUP BY user_id"
+        ).collect()
+    }
     n_by_stage = {s: 0 for s in (1, 2, 3)}
     for stage in final.values():
         # deepest stage reached implies all shallower stages
@@ -521,14 +506,12 @@ def test_append_watermark_boundary(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    q = (
+    drain(
+        spark,
         windowed.writeStream.format("memory")
         .queryName("wm_boundary")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     ends = sorted(
         r.e.strftime("%H:%M")
         for r in spark.table("wm_boundary")
@@ -589,10 +572,7 @@ def test_transform_with_state_funnel_matches_batch(spark, sf_dir, tmp_path):
         tmp_path,
         funnel_stages_v2,
         "tws_funnel",
-        conf={
-            "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER
-        },
-        available_now=True,
+        provider=ROCKSDB_PROVIDER,
     )
 
 
@@ -636,38 +616,27 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
             allow_truncated_timestamps=True,
         )
     schema = spark.read.parquet(str(d)).schema
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream = session_close_v2(
+    before = spark.conf.get(_PROVIDER_KEY, None)
+    drain(
+        spark,
+        session_close_v2(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(d)),
             gap_minutes=30,
             watermark="10 minutes",
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("tws_timers")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-        got = {
-            (r.user_id, r.session_end)
-            for r in spark.sql("SELECT * FROM tws_timers").collect()
-        }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == "tws_timers":
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        .writeStream.format("memory")
+        .queryName("tws_timers")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
+        provider=ROCKSDB_PROVIDER,
+    )
+    assert spark.conf.get(_PROVIDER_KEY, None) == before
+    got = {
+        (r.user_id, r.session_end)
+        for r in spark.sql("SELECT * FROM tws_timers").collect()
+    }
     gap = 30 * 60_000
     ms = lambda t: int(t.value // 1_000_000)  # noqa: E731
     want = {
@@ -738,42 +707,29 @@ def test_transform_with_state_list_and_map_state(spark, tmp_path):
     d.mkdir()
     pdf.to_parquet(d / "b0.parquet")
     schema = spark.read.parquet(str(d)).schema
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(str(d))
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                TypeStatsProcessor(),
-                outputStructType="user_id BIGINT, n_events BIGINT, n_types BIGINT",
-                outputMode="Update",
-                timeMode="None",
-            )
+    before = spark.conf.get(_PROVIDER_KEY, None)
+    drain(
+        spark,
+        spark.readStream.schema(schema)
+        .parquet(str(d))
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            TypeStatsProcessor(),
+            outputStructType="user_id BIGINT, n_events BIGINT, n_types BIGINT",
+            outputMode="Update",
+            timeMode="None",
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("tws_listmap")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "lm_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-        got = {
-            r.user_id: (r.n_events, r.n_types)
-            for r in spark.sql("SELECT * FROM tws_listmap").collect()
-        }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == "tws_listmap":
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        .writeStream.format("memory")
+        .queryName("tws_listmap")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "lm_ckpt")),
+        provider=ROCKSDB_PROVIDER,
+    )
+    assert spark.conf.get(_PROVIDER_KEY, None) == before
+    got = {
+        r.user_id: (r.n_events, r.n_types)
+        for r in spark.sql("SELECT * FROM tws_listmap").collect()
+    }
     want = {
         u: (len(g), g["event_type"].nunique())
         for u, g in pdf.groupby("user_id")
@@ -792,6 +748,28 @@ def test_stream_drain_restores_shuffle_width(spark, sf_dir):
     before = spark.conf.get(key)
     QUERIES["stream_events_hourly"](spark, sf_dir).collect()
     assert spark.conf.get(key) == before
+
+
+def test_drain_times_out_and_stops_query(spark, tmp_path, monkeypatch):
+    """A finite stream that does not finish within the drain bound
+    raises TimeoutError, and its query is stopped, not left running."""
+    import time
+
+    from another_map_reduce_spark.streaming import lifecycle
+
+    d = tmp_path / "slow_src"
+    d.mkdir()
+    (d / "a.txt").write_text("one line")
+    monkeypatch.setattr(lifecycle, "DRAIN_TIMEOUT_S", 1.0)
+    with pytest.raises(TimeoutError):
+        drain(
+            spark,
+            spark.readStream.text(str(d))
+            .writeStream.foreachBatch(lambda _df, _id: time.sleep(4))
+            .queryName("slow_drain")
+            .option("checkpointLocation", str(tmp_path / "ckpt")),
+        )
+    assert "slow_drain" not in {q.name for q in spark.streams.active}
 
 
 def test_foreachbatch_upsert_runs_multiple_batches(spark, sf_dir):
@@ -858,7 +836,8 @@ def test_late_filter_uses_previous_batch_watermark(spark, tmp_path):
                        allow_truncated_timestamps=True)
         os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
     schema = spark.read.parquet(str(d)).schema
-    q = (
+    q = drain(
+        spark,
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
@@ -869,11 +848,8 @@ def test_late_filter_uses_previous_batch_watermark(spark, tmp_path):
         .writeStream.format("memory")
         .queryName("late_filter_probe")
         .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
     )
-    q.awaitTermination()
     rows = {
         r.w.start.isoformat(): r.n
         for r in spark.table("late_filter_probe").collect()
@@ -1021,39 +997,28 @@ def _run_session_close_relay(spark, tmp_path, files, name):
 
         os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
     schema = spark.read.parquet(str(d)).schema
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        q = (
-            session_close_v2(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(d)),
-                gap_minutes=30,
-                watermark="10 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    before = spark.conf.get(_PROVIDER_KEY, None)
+    drain(
+        spark,
+        session_close_v2(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(d)),
+            gap_minutes=30,
+            watermark="10 minutes",
         )
-        q.awaitTermination(240)
-        t0_ms = int(pd.Timestamp("2024-01-01 00:00:00").value // 1_000_000)
-        return {
-            (r.user_id, (r.session_end - t0_ms) / 60_000.0)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == name:
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / f"{name}_ckpt")),
+        provider=ROCKSDB_PROVIDER,
+    )
+    assert spark.conf.get(_PROVIDER_KEY, None) == before
+    t0_ms = int(pd.Timestamp("2024-01-01 00:00:00").value // 1_000_000)
+    return {
+        (r.user_id, (r.session_end - t0_ms) / 60_000.0)
+        for r in spark.sql(f"SELECT * FROM {name}").collect()
+    }
 
 
 def test_tws_timer_final_flush_batch(spark, tmp_path):
@@ -1179,41 +1144,30 @@ def test_tws_initial_state_bootstrap(spark, tmp_path):
             [(1, 100), (2, 50)], "user_id long, balance long"
         ).groupBy("user_id")
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(str(src))
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                RunningTotal(),
-                outputStructType="user_id BIGINT, total BIGINT",
-                outputMode="Update",
-                timeMode="None",
-                initialState=init,
-            )
-            .writeStream.format("memory")
-            .queryName("tws_init")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "init_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    before = spark.conf.get(_PROVIDER_KEY, None)
+    drain(
+        spark,
+        spark.readStream.schema(schema)
+        .parquet(str(src))
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            RunningTotal(),
+            outputStructType="user_id BIGINT, total BIGINT",
+            outputMode="Update",
+            timeMode="None",
+            initialState=init,
         )
-        q.awaitTermination(240)
-        got = {
-            r.user_id: r.total
-            for r in spark.sql("SELECT * FROM tws_init").collect()
-        }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == "tws_init":
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        .writeStream.format("memory")
+        .queryName("tws_init")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "init_ckpt")),
+        provider=ROCKSDB_PROVIDER,
+    )
+    assert spark.conf.get(_PROVIDER_KEY, None) == before
+    got = {
+        r.user_id: r.total
+        for r in spark.sql("SELECT * FROM tws_init").collect()
+    }
     # user 1: 100 (bootstrap) + 7 + 3; user 3: no bootstrap, 0 + 5.
     # user 2 has initial state but no input: update mode emits only
     # keys that produced rows — absence is itself pinned here.
@@ -1269,15 +1223,13 @@ def test_full_outer_join_eviction_boundaries(spark, tmp_path):
         "event_id", "user_id", "ts"
     )
     qn = _fresh_sink_name("t_full_outer_probe")
-    q = (
+    drain(
+        spark,
         purchases_with_view_full(purchases, views)
         .writeStream.format("memory")
         .queryName(qn)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     out = spark.table(qn).collect()
     assert sorted(
         r.purchase_id for r in out if r.view_id is None
@@ -1332,15 +1284,13 @@ def test_checkpoint_restart_reads_only_new_files(spark, tmp_path):
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .select(F.col("w.start").alias("hour"), "event_type", "n")
         )
-        q = (
+        q = drain(
+            spark,
             windowed.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
         )
-        q.awaitTermination()
         return sum(
             json.loads(p.json).get("numInputRows", 0)
             for p in q.recentProgress
@@ -1412,14 +1362,12 @@ def test_stream_ohlc_minby_state_merges_across_microbatches(spark, tmp_path):
             F.max_by("value", ordk).alias("close"),
         )
     )
-    q = (
+    drain(
+        spark,
         windowed.writeStream.format("memory")
         .queryName("ohlc_merge")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     bars = {
         r.s.strftime("%H:%M"): (r.n, r.open, r.high, r.low, r.close)
         for r in spark.table("ohlc_merge")

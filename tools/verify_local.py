@@ -23,13 +23,17 @@ tracebacks and the judge's root-cause analysis:
 
 Usage::
 
-    python tools/verify_local.py [sf_dir] [query ...]
+    python tools/verify_local.py [sf_dir] [pattern ...]
 
-Exit code 0 iff every checked query matches.
+Each pattern is a query name or a shell-style pattern (``fnmatch``),
+e.g. ``'*stream*' pipeline_ingest_delta``; none checks every query.
+Exit code 0 iff every checked query matches and every pattern matched
+at least one query.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import sys
 import time
@@ -158,7 +162,7 @@ def main() -> int:
     vanilla = "--vanilla" in sys.argv[1:]
     float_ulp = "--float-ulp" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    patterns = args[1:]
 
     import __spark_entry__ as entrymod
 
@@ -185,9 +189,13 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = []
+    matched = {p: fnmatch.filter(qs, p) for p in patterns}
+    selected = {name for names in matched.values() for name in names}
+    failures = [p for p, names in matched.items() if not names]
+    for p in failures:
+        print(f"FAIL  {p}: matches no query")
     for name, fn in qs.items():
-        if only and name not in only:
+        if patterns and name not in selected:
             continue
         t0 = time.time()
         try:
