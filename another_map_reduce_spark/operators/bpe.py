@@ -16,7 +16,7 @@ Distributed shape — the part that matters at 100 TB:
 * each merge iteration is one vocab-sized pair-count shuffle plus a
   map-side fold applying the winning merge; the only driver action is
   the 1-row argmax winner per iteration (same bounded-collect budget
-  as graph.connected_components' convergence probe);
+  as graph._kiveris_components' convergence probe);
 * lineage is checkpointed per iteration so N merges cost N shallow
   plans, not one 2^N-deep expression tree.
 
@@ -346,7 +346,7 @@ def bpe_train_batched_incremental(
         new_pairs = bpe_pair_counts(new_affected)
         # eager=False + the token-total aggregate below: ONE job both
         # materialises the round's counts blocks and sums them (the
-        # connected_components convergence-probe discipline)
+        # _kiveris_components convergence-probe discipline)
         counts = (
             counts.unionByName(old_pairs)
             .unionByName(new_pairs)

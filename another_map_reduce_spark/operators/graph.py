@@ -1,48 +1,52 @@
 """Connected components over an edge list — the pairs→clusters step of
-near-dup deduplication.
+near-dup deduplication — and the other graph operators of the suite.
 
 The reference engine has no graph surface (its whole query capability is
-count-by-key, `/root/reference/src/worker.rs:23-38`); this is an
-[extension] operator: MinHash/SimHash/Jaccard emit near-dup PAIRS, but a
-dedup pipeline needs CLUSTERS (keep one survivor per group of mutually-
-similar documents, where similarity is transitively closed).
+count-by-key, `src/worker.rs:23-38`); this is an [extension] operator:
+MinHash/SimHash/Jaccard emit near-dup PAIRS, but a dedup pipeline needs
+CLUSTERS (keep one survivor per group of mutually-similar documents,
+where similarity is transitively closed).
 
-Algorithm: iterative min-label propagation, expressed as DataFrame ops —
-each round every node adopts the minimum label among itself and its
-neighbours; at convergence every node carries the minimum node id of its
-component (a deterministic, engine-independent cluster id).
+``connected_components`` labels every node with the minimum node id of
+its component (a deterministic, engine-independent cluster id).  It has
+two paths, chosen by the size of the edge list:
 
-Scale design:
-- one hash shuffle per round (the union+groupBy on node); the edge list
-  is re-used as-is, so edges shuffle once per round but never grow.
-- rounds = graph diameter.  Dedup-similarity graphs are overwhelmingly
-  tiny dense clusters (diameter ≤ 3-4), so propagation converges in a
-  handful of rounds; when ``max_iter`` rounds don't converge (an
-  adversarially long chain), the loop FALLS BACK to the Kiveris et al.
-  "Connected Components in MapReduce and Beyond" (2014) large-star /
-  small-star alternation, which contracts any graph in O(log² n)
-  rounds (O(log n) in practice) with the same one-shuffle-per-round
-  shape — so pathological diameters degrade gracefully instead of
-  raising.
-- convergence is detected with a one-row aggregate per round: labels
-  only ever DECREASE, so the global SUM(label) is strictly monotone and
-  stalls exactly at the fixed point — no expensive old-vs-new anti-join.
-- ONE action per round (AQE may split one action into several
-  scheduler jobs; the saved quantity is the driver round-trip and
-  the duplicate materialisation pass): the round's frame is marked
-  ``localCheckpoint(eager=False)``, so the convergence aggregate both
-  materialises the checkpoint blocks and computes the sum in a single
-  action (eager checkpointing ran a separate materialisation action
-  first, doubling the per-round driver round-trips).
-- `localCheckpoint` truncates the lineage each round so the plan (and
-  driver memory) stays O(1) in the number of iterations instead of
-  growing a nested-union tree Catalyst would re-optimize every round.
+- **Byte bound.** ``_LOCAL_CC_BYTES`` (64 MiB) at ``_EDGE_BYTES`` (16)
+  bytes per ``(long, long)`` edge, i.e. 4,194,304 edges.  It is a
+  module constant, not a conf or a parameter.
+- **Local path (at or under the bound).** The cast edge list is
+  checkpointed once; one ``limit(max_edges + 1)`` action both sizes it
+  and fetches it to the driver, where union-find with path compression
+  labels it, the smaller root winning each union so every root is its
+  component's minimum id.  With ``spark.sql.execution.arrow.pyspark.
+  enabled`` (set by ``get_spark``) the edges arrive and the labels
+  return through Arrow, so no Python worker starts.  Besides the edges
+  the driver holds the union-find's parent list, tens of bytes per
+  node.  Near-dup pair graphs are small (the ``dedup_clusters``
+  benchmark graph has ~600 edges), so this is the common path: a
+  handful of Spark jobs where iterative label propagation paid one
+  shuffle and one driver round trip per round.
+- **Over-bound path.** The same checkpoint goes to the Kiveris et al.
+  "Connected Components in MapReduce and Beyond" (SoCC 2014)
+  large-star/small-star alternation, which contracts any graph in
+  O(log² n) rounds (O(log n) in practice), one shuffle per operation.
+  Only the first ``max_edges + 1`` rows ever reach the driver, to be
+  dropped.
+- **Null rule.** An edge with a null endpoint names no document and is
+  dropped on both paths before anything else.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# The largest edge list connected_components labels on the driver, in
+# bytes at _EDGE_BYTES per (long, long) edge: 64 MiB = 4,194,304 edges.
+_LOCAL_CC_BYTES = 64 << 20
+_EDGE_BYTES = 16
 
 
 def _probe_count(df: DataFrame) -> int:
@@ -95,72 +99,86 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the
     minimum node id reachable from it.
 
     Returns a DataFrame (node: long, component: long) covering every
-    node that appears in at least one edge.  Deterministic: the
+    node that appears in at least one edge with two non-null endpoints;
+    edges with a null endpoint are dropped.  Deterministic: the
     component id is the component's minimum node id, independent of
-    partitioning, iteration count, or engine.
+    partitioning, path or engine.
 
-    Falls back to the Kiveris large-star/small-star algorithm if
-    ``max_iter`` propagation rounds don't converge (diameter >
-    max_iter) rather than raising or silently returning a partial
-    clustering.
+    Edge lists of at most ``_LOCAL_CC_BYTES`` (at ``_EDGE_BYTES`` per
+    edge) are labelled on the driver by union-find; the one
+    ``limit(max_edges + 1)`` action that fetches them also sizes them.
+    Larger ones stay on the executors and go through the Kiveris
+    large-star/small-star rounds (``_kiveris_components``).
     """
-    # Checkpoint BEFORE symmetrising: the upstream edge pipeline (often
-    # an expensive LSH/verify join) is evaluated exactly once; the
-    # union's two branches then read the cached blocks.  Symmetrising
-    # first made the eager checkpoint evaluate the upstream twice —
-    # measured ~2× the LSH cost inside dedup_cc_clusters.
-    base = edges.select(
-        F.col(src).cast("long").alias("node"),
-        F.col(dst).cast("long").alias("nbr"),
-    ).localCheckpoint()
-    sym = base.union(
-        base.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
-    )
-    # eager=False throughout the loop: the convergence aggregate below
-    # is the action that materialises each round's checkpoint blocks,
-    # so every round costs exactly one driver action.
-    labels = (
-        sym.select("node").distinct().withColumn("lbl", F.col("node"))
-    ).localCheckpoint(eager=False)
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
-        msgs = sym.join(labels, "node").select(
-            F.col("nbr").alias("node"), "lbl"
+    # Checkpoint once: the upstream edge pipeline (often an expensive
+    # LSH/verify join) is evaluated exactly once, and both the size
+    # check and the over-bound path read the cached blocks.  The null
+    # filter sits ABOVE the checkpoint: below it, Catalyst pushes it
+    # into the upstream join and re-orders that join's condition
+    # (measured on semantic_dedup_stats at sf0.1: the cosine test moved
+    # ahead of the cheap v1 < v2 test, and the pair stage went from
+    # 1.9 s to 3.6 s).
+    base = (
+        edges.select(
+            F.col(src).cast("long").alias("node"),
+            F.col(dst).cast("long").alias("nbr"),
         )
-        labels = (
-            labels.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint(eager=False)
-        cur_sum = _label_sum(labels)
-        if cur_sum == prev_sum:
-            return labels.select("node", F.col("lbl").alias("component"))
-        prev_sum = cur_sum
-    return _kiveris_components(sym)
+        .localCheckpoint()
+        .where(F.col("node").isNotNull() & F.col("nbr").isNotNull())
+    )
+    max_edges = _LOCAL_CC_BYTES // _EDGE_BYTES
+    local = base.limit(max_edges + 1).toPandas()
+    if len(local) > max_edges:
+        return _kiveris_components(base)
+    return base.sparkSession.createDataFrame(
+        _union_find(
+            local["node"].to_numpy(np.int64), local["nbr"].to_numpy(np.int64)
+        ),
+        "node long, component long",
+    )
 
 
-def _label_sum(labels: DataFrame):
-    """Decimal SUM of the label column — the monotone convergence
-    scalar (labels only decrease, so the sum stalls exactly at the
-    fixed point).  One 1-row collect; the only driver-side data."""
-    return labels.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).collect()[0][0]
+def _union_find(src: np.ndarray, dst: np.ndarray) -> pd.DataFrame:
+    """(node, component) for the undirected edges ``src[i]``–``dst[i]``
+    by union-find with path compression.  ``np.unique`` numbers the
+    nodes in ascending id order, so keeping the SMALLER root in every
+    union leaves each root at its component's minimum id."""
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    parent = list(range(len(nodes)))
+
+    def find(x: int) -> int:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    m = len(src)
+    for a, b in zip(idx[:m].tolist(), idx[m:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    roots = np.array([find(x) for x in range(len(nodes))], dtype=np.intp)
+    return pd.DataFrame({"node": nodes, "component": nodes[roots]})
 
 
 def _kiveris_components(
-    sym: DataFrame,
+    pairs: DataFrame,
     max_rounds: int = 60,
     stats: dict | None = None,
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-    O(log² n)-round fallback for graphs whose diameter defeats plain
-    label propagation.
+    O(log² n)-round over-bound path of ``connected_components``, for
+    edge lists too large to label on the driver.
 
     Each operation is one groupBy shuffle over the edge list:
 
@@ -172,22 +190,27 @@ def _kiveris_components(
 
     At the fixed point the edge list is exactly {(v, root(v)) : v ≠
     root}; together with the isolated roots that is the (node,
-    component) labelling.  Convergence is detected with the same
-    monotone scalar trick as propagation: both operations only ever
-    REPLACE an endpoint with a smaller one, so SUM over all edge
-    endpoints is non-increasing and stalls iff the edge set is stable.
+    component) labelling.  Convergence is detected with a monotone
+    scalar: both operations only ever REPLACE an endpoint with a
+    smaller one, so SUM over all edge endpoints is non-increasing and
+    stalls iff the edge set is stable.
 
-    ``sym`` must be the symmetrised (node, nbr) edge list with no
-    self-loops required (they're harmless).  ``stats``, when given, is
-    filled with {"rounds": r} — test instrumentation for the O(log n)
-    round-count contract.
+    ``pairs`` is the (node, nbr) edge list without null endpoints, in
+    either or both orientations; self-loops are harmless.  ``stats``,
+    when given, is filled with {"rounds": r} — test instrumentation
+    for the O(log n) round-count contract.
     """
-    edges = sym.select(
+    edges = pairs.select(
         F.least("node", "nbr").alias("u"), F.greatest("node", "nbr").alias("v")
     ).where(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=False)
     # Every node that ever appeared — needed at the end because star
     # contraction drops nodes that become isolated roots.
-    all_nodes = sym.select("node").distinct().localCheckpoint()
+    all_nodes = (
+        pairs.select("node")
+        .union(pairs.select(F.col("nbr").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
 
     def endpoint_sum(e: DataFrame):
         return e.agg(
@@ -641,19 +664,20 @@ def incremental_components(
     Construction: each stored assignment becomes a STAR edge
     (node → component; the component id IS a member node — the
     min-label invariant — so stars preserve exactly the old graph's
-    connectivity), unioned with the new edges, then the standard
-    min-label propagation.  Correctness: CC(stars ∪ Δ) = CC(E ∪ Δ)
+    connectivity), unioned with the new edges, then labelled by
+    connected_components.  Correctness: CC(stars ∪ Δ) = CC(E ∪ Δ)
     because stars and E have identical transitive closure over the old
     nodes; min-label ids survive because a merged cluster's minimum is
     min(old component ids, new node ids) either way (oracle-proven by
     dedup_cc_incremental's hash against the one-shot recursive CTE).
 
-    Cost: the propagated frame is |clustered nodes| + |Δ| rows — never
-    the historical EDGE count (similarity graphs are edge-heavy), and
-    stars have diameter ≤ 2, so rounds ≈ the diameter of the NEW
-    linkage only.  Nodes appear in the output iff they touch an edge
-    (old stars or Δ) — the same contract as connected_components.
-    [extension].
+    Cost: the labelled edge list is |clustered nodes| + |Δ| rows —
+    never the historical EDGE count (similarity graphs are
+    edge-heavy) — so it stays under connected_components' byte bound,
+    and on the driver, far longer than the full edge list would.
+    Nodes appear in the output iff they touch an edge (old stars or
+    Δ) — the same contract as connected_components, null rule
+    included.  [extension].
     """
     star = labels.select(
         F.col("node").cast("long").alias("node"),
@@ -778,7 +802,7 @@ def hits(
     # caller's upstream pipeline (a corpus-sized join + distinct in
     # hits_hubs_authorities) — checkpointing the shared parent makes
     # both repartitions read the same cached blocks, halving the
-    # edge-build cost (the connected_components pre-symmetrise
+    # edge-build cost (the connected_components edge-checkpoint
     # precedent).
     base = edges.localCheckpoint(eager=False)
     e_src = base.repartition("src").localCheckpoint(eager=False)

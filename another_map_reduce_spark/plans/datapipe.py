@@ -1023,7 +1023,8 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (left-fold dot, n1·n2 product, single divide) matches the
     oracle's list_dot_product/sqrt expression exactly, so the rounded
     threshold comparison is bit-identical cross-engine.  Clustering
-    is min-label propagation (operators/graph.connected_components);
+    is operators/graph.connected_components (union-find on the driver
+    while the pairs fit its byte bound, Kiveris rounds above it);
     the oracle recomputes everything from first principles
     (within-label brute force + recursive-CTE reachability).
     """

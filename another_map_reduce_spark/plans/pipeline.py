@@ -1118,8 +1118,8 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # closes the exact-Jaccard pair graph with a recursive CTE (min-label
 # reachability ≡ connected components); the Spark side runs the SCALE
 # pipeline end-to-end — MinHash-LSH candidates → exact-Jaccard verify →
-# iterative min-label propagation — so one hash row proves the whole
-# dedup chain, not just the pair stage.
+# connected components — so one hash row proves the whole dedup chain,
+# not just the pair stage.
 _CC_SQL = f"""
 WITH RECURSIVE sh AS (
   SELECT doc_id AS doc, unnest({_SHINGLES}) AS shingle FROM documents
@@ -1163,7 +1163,8 @@ def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components of the similarity graph.  Spark side: LSH
     candidates → exact-Jaccard verify (≡ exact pairs, see
     dedup_minhash_lsh) → operators.graph.connected_components
-    (min-label propagation, one shuffle/round, O(diameter) rounds).
+    (union-find on the driver while the pairs fit its byte bound,
+    Kiveris large-star/small-star rounds above it).
     Oracle: recursive-CTE reachability over the exact pair graph.
     """
     from another_map_reduce_spark.operators.dedup import minhash_lsh_pairs
@@ -2748,8 +2749,6 @@ def lm_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-broadcast a corpus-scale LM.  Per-doc rates are rounded to 6
     and averaged in DECIMAL — order-free.
     """
-    from pyspark.sql.window import Window as _W  # noqa: F401
-
     from another_map_reduce_spark.functions.aggs import davg
     from another_map_reduce_spark.operators.text_analysis import _ws_tokens
 
@@ -3820,7 +3819,6 @@ def embedding_rp_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL-mean, and the driver hash is exact.  [extension].
     """
     from another_map_reduce_spark.operators.similarity import (
-        rp_dot,
         rp_project,
         sign_projection_matrix,
     )

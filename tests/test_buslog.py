@@ -122,10 +122,7 @@ def test_producer_sink_batch_replay_is_idempotent(spark, tmp_path):
     """Exactly-once producer: a replayed micro-batch (same batch id)
     first removes its own committed segments, so reruns cannot
     duplicate records."""
-    from another_map_reduce_spark.sources.buslog import (
-        _BusLogCommit,
-        _BusLogStreamWriter,
-    )
+    from another_map_reduce_spark.sources.buslog import _BusLogStreamWriter
 
     root = str(tmp_path / "bus2")
     w = _BusLogStreamWriter(

@@ -212,28 +212,29 @@ def test_connected_components_shapes(spark):
     }
 
 
-def test_connected_components_diameter_guard(spark):
-    """A chain longer than max_iter no longer raises: propagation hands
-    off to the Kiveris large-star/small-star fallback, which contracts
-    the chain in O(log n) rounds and returns the SAME labelling the
-    plain propagation would have produced."""
-    from another_map_reduce_spark.operators.graph import connected_components
+def test_connected_components_diameter_guard(spark, monkeypatch):
+    """A long chain over the byte bound goes to the Kiveris
+    large-star/small-star path, which contracts the chain in O(log n)
+    rounds and returns the SAME labelling the local union-find
+    produces."""
+    from another_map_reduce_spark.operators import graph
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src long, dst long"
     )
-    via_fallback = connected_components(chain, max_iter=2)
+    full = graph.connected_components(chain)
+    monkeypatch.setattr(graph, "_LOCAL_CC_BYTES", 0)
+    via_fallback = graph.connected_components(chain)
     assert {r.component for r in via_fallback.collect()} == {0}
     assert via_fallback.count() == 13  # every node labelled, none dropped
-    full = connected_components(chain, max_iter=15)
     assert {r.component for r in full.collect()} == {0}
 
 
-def test_kiveris_fallback_multi_component(spark):
-    """Kiveris fallback on a forest: two long chains + an isolated
-    2-node edge; labels must equal each component's min node id and
-    match plain propagation's output exactly."""
-    from another_map_reduce_spark.operators.graph import connected_components
+def test_kiveris_fallback_multi_component(spark, monkeypatch):
+    """Kiveris over-bound path on a forest: two long chains + an
+    isolated 2-node edge; labels must equal each component's min node
+    id and match the local path's output exactly."""
+    from another_map_reduce_spark.operators import graph
 
     edges = (
         [(i, i + 1) for i in range(10, 25)]      # chain: component 10
@@ -241,13 +242,51 @@ def test_kiveris_fallback_multi_component(spark):
         + [(100, 101)]                            # pair: component 100
     )
     df = spark.createDataFrame(edges, "src long, dst long")
-    via_fallback = connected_components(df, max_iter=1).orderBy("node")
-    via_prop = connected_components(df, max_iter=40).orderBy("node")
+    via_local = graph.connected_components(df).orderBy("node")
+    monkeypatch.setattr(graph, "_LOCAL_CC_BYTES", 0)
+    via_fallback = graph.connected_components(df).orderBy("node")
     assert [tuple(r) for r in via_fallback.collect()] == [
-        tuple(r) for r in via_prop.collect()
+        tuple(r) for r in via_local.collect()
     ]
     comps = {r.component for r in via_fallback.collect()}
     assert comps == {10, 40, 100}
+
+
+def test_connected_components_local_kiveris_parity(spark, monkeypatch):
+    """The local union-find and the over-bound Kiveris path give the
+    same hand-written labelling on chains, a star, a cycle, duplicate,
+    reversed and self-loop edges; both drop edges with a null
+    endpoint, so node 5 (reached only through one) is not labelled."""
+    from another_map_reduce_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [
+            (9, 8), (8, 7), (6, 7),              # reversed chain 6-7-8-9
+            (30, 31), (30, 32), (30, 33),        # star on 30
+            (21, 20), (22, 21), (20, 22),        # cycle 20-21-22
+            (40, 41), (41, 40), (40, 41),        # duplicate + reversed
+            (50, 50),                            # self-loop only
+            (1, 2), (2, None), (None, 5),        # null endpoints
+        ],
+        "src long, dst long",
+    )
+    want = {
+        6: 6, 7: 6, 8: 6, 9: 6,
+        30: 30, 31: 30, 32: 30, 33: 30,
+        20: 20, 21: 20, 22: 20,
+        40: 40, 41: 40,
+        50: 50,
+        1: 1, 2: 1,
+    }
+
+    def labels():
+        got = [tuple(r) for r in graph.connected_components(edges).collect()]
+        assert len(got) == len(want)  # one row per node
+        return dict(got)
+
+    local = labels()
+    monkeypatch.setattr(graph, "_LOCAL_CC_BYTES", 0)
+    assert labels() == local == want
 
 
 def test_kiveris_long_chain_log_rounds(spark):
