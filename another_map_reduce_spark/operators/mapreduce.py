@@ -3,49 +3,43 @@
 The reference hardcodes ``fn map(String) -> Vec<(String,String)>`` and
 ``fn reduce(String, Vec<String>) -> (String,String)`` into the worker
 binary (`/root/reference/src/worker.rs:23-38`; `README.md:32-33` frames
-them as the user-supplied pair).  Here the same contract is a function
-over DataFrames, with three execution paths ordered fastest-first:
+them as the user-supplied pair).  Here the same contract is one
+function over DataFrames, ``map_reduce``, with the three phases of the
+MapReduce paper (Dean & Ghemawat, OSDI 2004):
 
-1. ``map_reduce_associative`` — merge_fn is associative+commutative →
-   ``reduceByKey``: map-side combine shuffles ~distinct-keys instead of
-   ~all-pairs.  The reference has no combiner (src/worker.rs:95-115
-   writes every pair), so this path strictly dominates it at scale.
-2. ``map_reduce`` — the faithful contract: full shuffle, values
-   gathered per key (groupByKey ≙ the BTreeMap at src/worker.rs:118),
-   then ``reduce_fn(key, values)``.  Use only when the reduction truly
-   needs all values at once (medians, top-k lists, ...).
-3. ``map_reduce_pandas`` — Arrow-vectorized variant: pandas batches in,
-   pandas batches out; for map/reduce logic that is vectorizable the
-   Python overhead drops ~10-100× vs per-row callables.
+1. **map** — ``map_fn`` sees one input record and emits any number of
+   ``(key, value)`` pairs (``flatMap``).
+2. **combine** (optional) — ``combine_fn`` merges two values of the same
+   key; it must be associative and commutative.  Given one, the pairs
+   are merged on the map side by ``reduceByKey``, so the shuffle
+   carries about one value per (map task, key) instead of every pair
+   (the paper's §4.3 combiner function).  The reference has no
+   combiner: src/worker.rs:95-115 writes every pair.
+3. **reduce** — ``reduce_fn(key, values)`` after a hash shuffle into
+   ``num_buckets`` partitions.  Without a combiner ``values`` is every
+   value of the key (groupByKey ≙ the BTreeMap at src/worker.rs:118);
+   with one it is a one-element list holding the merged value, so
+   ``reduce_fn`` finishes the fold (sum and count → mean, say) and may
+   return another type than the merged one.
 
-All paths end in a typed DataFrame so downstream relational operators
-compose with the result.
+The result is a typed ``(key, value)`` DataFrame so downstream
+relational operators compose with it.  Vectorised map logic needs no
+wrapper: ``mapInPandas`` followed by ``groupBy(...).agg(...)`` is the
+Arrow path (``pandas_wordcount`` in ``plans/reference_parity.py``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator, Sequence
+from collections.abc import Callable, Iterable
 from typing import Any
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Row, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import DataFrame, Row, SparkSession
+
+from another_map_reduce_spark.session import shuffle_width
 
 MapFn = Callable[[Row], Iterable[tuple[Any, Any]]]
 ReduceFn = Callable[[Any, list[Any]], tuple[Any, Any]]
-MergeFn = Callable[[Any, Any], Any]
-
-
-def _out_schema(key_type: str, value_type: str) -> str:
-    return f"key {key_type}, value {value_type}"
-
-
-def _num_buckets(df: DataFrame, num_buckets: int | None) -> int:
-    # ≙ the reference's `-n num_buckets` (src/main.rs:21-24): reduce-side
-    # parallelism. Default to the session shuffle setting.
-    if num_buckets is not None:
-        return num_buckets
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+CombineFn = Callable[[Any, Any], Any]
 
 
 def map_reduce(
@@ -55,102 +49,35 @@ def map_reduce(
     num_buckets: int | None = None,
     key_type: str = "string",
     value_type: str = "string",
+    combine_fn: CombineFn | None = None,
 ) -> DataFrame:
-    """Faithful MapReduce: flatMap → hash shuffle → group → reduce.
+    """MapReduce: flatMap → [combine] → hash shuffle → reduce.
 
     Semantics per the reference (src/worker.rs:87-154): ``map_fn`` sees
     one input record and emits any number of (key, value) pairs; after a
-    hash shuffle on key into ``num_buckets`` partitions, ``reduce_fn``
-    sees each key once with ALL its values.  Value arrival order within
-    a key is not guaranteed (the reference doesn't guarantee it either —
-    map-task read order is scheduler-dependent).
+    hash shuffle on key into ``num_buckets`` partitions (≙ the
+    reference's ``-n``, src/main.rs:21-24; default the session's
+    shuffle width), ``reduce_fn`` sees each key once.  Value arrival
+    order within a key is not guaranteed (the reference doesn't
+    guarantee it either — map-task read order is scheduler-dependent).
 
-    Scale note: this path materialises every value list; prefer
-    ``map_reduce_associative`` whenever the reduction is a fold.
+    Without ``combine_fn`` every value list is materialised: use that
+    only when the reduction needs all values at once (medians, top-k,
+    posting lists).  With it, ``reduce_fn`` gets ``[merged]``.
     """
-    r = _num_buckets(df, num_buckets)
+    r = num_buckets if num_buckets is not None else shuffle_width(df.sparkSession)
     pairs = df.rdd.flatMap(map_fn)
-    reduced = (
-        pairs.groupByKey(numPartitions=r)  # ≙ BTreeMap gather, src/worker.rs:118
-        .map(lambda kv: reduce_fn(kv[0], list(kv[1])))
-    )
+    if combine_fn is None:
+        reduced = (
+            pairs.groupByKey(numPartitions=r)  # ≙ BTreeMap gather, src/worker.rs:118
+            .map(lambda kv: reduce_fn(kv[0], list(kv[1])))
+        )
+    else:
+        reduced = pairs.reduceByKey(combine_fn, numPartitions=r).map(
+            lambda kv: reduce_fn(kv[0], [kv[1]])
+        )
     return df.sparkSession.createDataFrame(
-        reduced, schema=_out_schema(key_type, value_type)
-    )
-
-
-def map_reduce_associative(
-    df: DataFrame,
-    map_fn: MapFn,
-    merge_fn: MergeFn,
-    num_buckets: int | None = None,
-    key_type: str = "string",
-    value_type: str = "string",
-) -> DataFrame:
-    """MapReduce with map-side combine (the 100 TB path).
-
-    ``merge_fn`` must be associative and commutative.  Equivalent to
-    the reference job whenever its reduce is a fold of the mapped
-    values — e.g. word count: emit ``(word, 1)``, merge ``+`` ≡
-    ``len(values)`` (src/worker.rs:36-38).
-    """
-    r = _num_buckets(df, num_buckets)
-    reduced = df.rdd.flatMap(map_fn).reduceByKey(merge_fn, numPartitions=r)
-    return df.sparkSession.createDataFrame(
-        reduced, schema=_out_schema(key_type, value_type)
-    )
-
-
-def map_reduce_pandas(
-    df: DataFrame,
-    map_batch_fn: Callable[[pd.DataFrame], pd.DataFrame],
-    reduce_group_fn: Callable[[pd.DataFrame], pd.DataFrame] | None,
-    map_schema: StructType | str,
-    out_schema: StructType | str,
-    key_col: str = "key",
-    num_buckets: int | None = None,
-    combine_batch_fn: Callable[[pd.DataFrame], pd.DataFrame] | None = None,
-    finish_aggs: Sequence[Column] | None = None,
-) -> DataFrame:
-    """Arrow-vectorized MapReduce.
-
-    ``map_batch_fn``: pandas batch of input rows → pandas frame of
-    emitted pairs (must contain ``key_col``).
-
-    Reduce side, fastest-first:
-
-    * ``finish_aggs`` (Spark agg Columns) — for ALGEBRAIC reductions:
-      the shuffle is a plain ``groupBy(key).agg(...)`` with map-side
-      combine and whole-stage codegen; no second Python hop at all.
-      (A per-key ``applyInPandas`` reduce measured 6.4 s vs 0.4 s for
-      this path on 31-key word count — pandas overhead × |keys|.)
-    * ``reduce_group_fn`` — the general contract: pandas frame of ONE
-      key's rows → reduced frame, via ``applyInPandas``.  Use only
-      when the reduction truly needs all of a key's values at once.
-
-    ``combine_batch_fn`` (optional, either mode): pandas pre-aggregation
-    applied INSIDE each map batch — the Arrow shuffle then carries one
-    partial per (batch, key) instead of every emitted pair, the same
-    map-side-combine role the associative RDD path gets from
-    reduceByKey.
-    """
-    r = _num_buckets(df, num_buckets)
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = map_batch_fn(batch)
-            if combine_batch_fn is not None and len(out):
-                out = combine_batch_fn(out)
-            if len(out):
-                yield out
-
-    mapped = df.mapInPandas(_map, schema=map_schema)
-    if finish_aggs is not None:
-        return mapped.groupBy(key_col).agg(*finish_aggs)
-    if reduce_group_fn is None:
-        raise ValueError("need reduce_group_fn or finish_aggs")
-    return mapped.repartition(r, key_col).groupBy(key_col).applyInPandas(
-        lambda g: reduce_group_fn(g), schema=out_schema
+        reduced, schema=f"key {key_type}, value {value_type}"
     )
 
 

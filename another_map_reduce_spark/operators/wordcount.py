@@ -16,10 +16,23 @@ difference between shuffling ~distinct-words and shuffling ~all-tokens.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from another_map_reduce_spark.functions.text import tokenize
+
+
+def count_words(
+    df: DataFrame, text_col: str = "text", lowercase: bool = False
+) -> DataFrame:
+    """The count stage every word count shares: tokenize ``text_col`` →
+    ``groupBy(word)`` → ``count(*) AS cnt``, unordered.  Works on batch
+    and streaming frames alike."""
+    return (
+        df.select(tokenize(F.col(text_col), lowercase=lowercase).alias("word"))
+        .groupBy("word")
+        .agg(F.count("*").alias("cnt"))
+    )
 
 
 def word_count(
@@ -31,12 +44,7 @@ def word_count(
     reference's per-bucket order (SURVEY.md §2a #11); the sort runs
     after the aggregation so it orders ~distinct-words rows, not tokens.
     """
-    return (
-        df.select(tokenize(F.col(text_col), lowercase=lowercase).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("word")
-    )
+    return count_words(df, text_col, lowercase).orderBy("word")
 
 
 def word_count_bucketed(
@@ -53,11 +61,8 @@ def word_count_bucketed(
     ``.write.partitionBy("bucket")`` on this frame yields one directory
     per bucket ≙ one ``reduce_result_{r}`` file per reduce task.
     """
-    counted = (
-        df.select(tokenize(F.col(text_col)).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("bucket", F.pmod(F.hash(F.col("word")), F.lit(num_buckets)))
+    counted = count_words(df, text_col).withColumn(
+        "bucket", F.pmod(F.hash(F.col("word")), F.lit(num_buckets))
     )
     # Sort by (bucket, word): a partitionBy("bucket") write requires rows
     # ordered by the partition column and would otherwise insert its own

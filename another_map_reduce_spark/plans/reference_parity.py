@@ -1,11 +1,20 @@
 """Reference-parity queries: the jobs the reference itself can run.
 
 The reference ships exactly one job — case-sensitive word count over
-text (`/root/reference/src/worker.rs:23-38`, oracle `verify.py`).  Both
-entries here compute it over ``documents.text`` with identical
-semantics; ``mr_wordcount`` does so through the generic ``map_reduce``
-API (the reference's real surface, SURVEY.md §2b last row) to prove the
-pluggable path agrees with the declarative one.
+text (the reference's `src/worker.rs:23-38`, oracle `verify.py`).  The
+``*wordcount`` entries here all compute it over ``documents.text``
+against that one oracle, each through another execution path of its
+map function:
+
+* ``wordcount`` — declarative tokenize → ``groupBy`` → count;
+* ``mr_wordcount`` — the generic ``map_reduce`` API with a combiner
+  (the reference's real surface, SURVEY.md §2b last row);
+* ``pandas_wordcount`` — an Arrow-vectorised ``mapInPandas`` map;
+* ``udtf_wordcount`` — a Python UDTF under a LATERAL join;
+* ``pysource_wordcount`` / ``pysource_stream_wordcount`` — the custom
+  Python DataSource, batch and streaming.
+
+Agreeing hashes prove each pluggable path matches the declarative one.
 """
 
 from __future__ import annotations
@@ -45,27 +54,31 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("mr_wordcount", oracle=_WORDCOUNT_SQL)
 def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word count via the generic map_reduce API (combiner path).
+    """Word count via the generic ``map_reduce`` API with a combiner.
 
     Same user-function pair as src/worker.rs:23-38, expressed as Python
-    callables over the pluggable surface the reference hardcodes.
+    callables over the pluggable surface the reference hardcodes, plus
+    the combiner the reference lacks: ``+`` merges the mapped 1s on the
+    map side, and the reduce sums the merged partial it is handed.
     """
+    import operator
     import re
 
     from pyspark.sql import functions as F
 
-    from another_map_reduce_spark.operators.mapreduce import map_reduce_associative
+    from another_map_reduce_spark.operators.mapreduce import map_reduce
 
     sep = re.compile(r"[^A-Za-z]")
 
     def map_fn(row):  # ≙ fn map(), src/worker.rs:23-34
         return [(w, 1) for w in sep.sub(" ", row.text).split()]
 
-    # merge `+` over the mapped 1s ≡ the reference reduce's len(values)
-    # (src/worker.rs:36-38) — but with map-side combine.
+    def reduce_fn(word, counts):  # ≙ len(values), src/worker.rs:36-38
+        return word, sum(counts)
+
     docs = load_table(spark, sf_dir, "documents").select("text")
-    out = map_reduce_associative(
-        docs, map_fn, lambda a, b: a + b, value_type="long"
+    out = map_reduce(
+        docs, map_fn, reduce_fn, value_type="long", combine_fn=operator.add
     )
     return out.select(
         F.col("key").alias("word"), F.col("value").alias("cnt")
@@ -74,41 +87,39 @@ def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("pandas_wordcount", oracle=_WORDCOUNT_SQL)
 def pandas_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word count via the Arrow-vectorized map_reduce_pandas path —
-    the third execution path of the generic API, proving all three
-    agree with the reference semantics (and the same oracle).
+    """Word count with an Arrow-vectorised map: ``mapInPandas`` emits
+    one ``(key, partial)`` row per word and batch, and a plain
+    ``groupBy(key).sum`` merges the partials.
+
+    Word count is algebraic, so the reduce stays a codegen'd
+    aggregation with its own map-side combine; a per-key pandas reduce
+    (``applyInPandas``) measured 6.4 s against 0.4 s for this path on
+    31 keys at sf0.1.
     """
+    from collections.abc import Iterator
+
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from another_map_reduce_spark.operators.mapreduce import map_reduce_pandas
-
-    def map_batch(batch: pd.DataFrame) -> pd.DataFrame:
-        words = (
-            batch["text"]
-            .str.replace(r"[^A-Za-z]", " ", regex=True)
-            .str.split()
-            .explode()
-            .dropna()
-        )
-        return pd.DataFrame({"key": words, "partial": 1})
-
-    def combine_batch(pairs: pd.DataFrame) -> pd.DataFrame:
-        # map-side combine: one partial per (batch, word)
-        return pairs.groupby("key", as_index=False)["partial"].sum()
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            words = (
+                batch["text"]
+                .str.replace(r"[^A-Za-z]", " ", regex=True)
+                .str.split()
+                .explode()
+                .dropna()
+            )
+            if len(words):
+                # batch combine: one partial per (batch, word)
+                pairs = pd.DataFrame({"key": words, "partial": 1})
+                yield pairs.groupby("key", as_index=False)["partial"].sum()
 
     docs = load_table(spark, sf_dir, "documents").select("text")
-    # word count is algebraic → pandas map + batch combine, then a
-    # plain codegen'd groupBy/sum merge (no per-key pandas reduce,
-    # which measured 6.4 s for 31 keys at sf0.1).
-    out = map_reduce_pandas(
-        docs,
-        map_batch,
-        None,
-        map_schema="key string, partial long",
-        out_schema="key string, value long",
-        combine_batch_fn=combine_batch,
-        finish_aggs=[F.sum("partial").alias("value")],
+    out = (
+        docs.mapInPandas(_map, schema="key string, partial long")
+        .groupBy("key")
+        .agg(F.sum("partial").alias("value"))
     )
     return out.select(
         F.col("key").alias("word"), F.col("value").alias("cnt")
@@ -210,9 +221,7 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from another_map_reduce_spark.functions.text import tokenize
+    from another_map_reduce_spark.operators.wordcount import count_words
     from another_map_reduce_spark.plans.relational import (
         _DRAIN_WIDTH,
         _fresh_sink_name,
@@ -232,11 +241,7 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.format("reftext").load(
         os.path.join(path, "part-*")
     )
-    counts = (
-        stream.select(tokenize(F.col("text")).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-    )
+    counts = count_words(stream, "text")
     qname = _fresh_sink_name("pysource_stream_wordcount")
     drain(
         spark,

@@ -31,6 +31,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
+# How long ``StreamingQuery.stop()`` waits for a micro-batch that ignores
+# the stop's interrupt (driver-side Python, e.g. a ``foreachBatch``
+# callback) before it raises; Spark's default, 0, waits forever.  Spark
+# reads it from the session that started the query, at stop time, so it
+# is a session conf, not a per-query one.  It must outlast any healthy
+# micro-batch, which takes no longer than its whole drain: the slowest
+# registry drain, stream_session_close_tws at sf1, took 232 s.
+STREAM_STOP_TIMEOUT_MS = 300_000
+
 
 def get_spark(
     app_name: str = "another-map-reduce-spark",
@@ -78,6 +87,7 @@ def get_spark(
         # which vanilla Spark rejects; read as long and convert in the
         # loader (sources/tables.py) — DuckDB likewise truncates to µs.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.streaming.stopTimeout", str(STREAM_STOP_TIMEOUT_MS))
         # Quieter local runs.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

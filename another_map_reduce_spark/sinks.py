@@ -3,9 +3,10 @@
 The reference's sink is R text files, one per reduce bucket, keys
 ascending, committed atomically via temp+rename (`/root/reference/
 src/worker.rs:107-114,144-154`).  Spark's output committer provides
-the atomicity; these helpers provide the layouts:
+the atomicity, and ``operators.mapreduce.run_wordcount_job`` writes the
+reference layout itself (``word_count_bucketed`` + a ``bucket``
+partitioned write).  These helpers provide the scale-out layouts:
 
-* ``write_text_buckets``   — byte-for-byte the reference layout
 * ``write_partitioned``    — hive-style ``col=value`` directories:
                              partition PRUNING for every downstream
                              reader that filters on the key
@@ -23,32 +24,6 @@ join keys (user_id, orderkey — fixed file count, hash-spread).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def write_text_buckets(
-    df: DataFrame,
-    output_dir: str,
-    num_buckets: int,
-    key_col: str = "word",
-    value_col: str = "cnt",
-) -> None:
-    """The reference's exact output contract: ``bucket=r`` directories,
-    ``"{key} {value}"`` lines, keys ascending within each bucket
-    (src/worker.rs:144-154 + BTreeMap order, src/worker.rs:118)."""
-    bucketed = df.withColumn(
-        "bucket", F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets))
-    )
-    (
-        bucketed.repartition(num_buckets, "bucket")
-        # pre-sort by the partition column too: the writer would
-        # otherwise insert its own bucket-only sort and scramble keys
-        .sortWithinPartitions("bucket", key_col)
-        .select(key_col, value_col, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .csv(output_dir, sep=" ")
-    )
 
 
 def write_partitioned(

@@ -19,13 +19,16 @@ Every streaming caller in this package goes through three steps:
   far.  Only a stream that keeps running between phases needs it.
 
 A finite stream is never waited on without a bound: a wedged source
-raises ``TimeoutError`` and its query is stopped.
+raises ``TimeoutError`` and its query is stopped.  The stop is bounded
+too, by the session's ``spark.sql.streaming.stopTimeout``
+(``session.STREAM_STOP_TIMEOUT_MS``).
 """
 
 from __future__ import annotations
 
 import threading
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
@@ -109,6 +112,13 @@ def drain(
     stopped and ``TimeoutError`` raised.  The query is stopped on
     every path, so none outlives the call; its ``recentProgress``
     stays readable.
+
+    The stop is bounded by the session's
+    ``spark.sql.streaming.stopTimeout``: a batch still running past it
+    raises ``TimeoutError`` (the query is inactive by then, but the
+    batch's own thread may still be finishing).  ``get_spark`` sets the
+    bound; a session not built by ``get_spark`` keeps Spark's default
+    of 0, an unbounded stop.
     """
     q = start_stateful(
         spark, writer.trigger(availableNow=True), width=width, provider=provider
@@ -116,13 +126,27 @@ def drain(
     try:
         finished = q.awaitTermination(DRAIN_TIMEOUT_S)
     finally:
-        q.stop()
+        _stop(q)
     if not finished:
         raise TimeoutError(
             f"streaming drain did not finish within {DRAIN_TIMEOUT_S}s "
             "(query stopped)"
         )
     return q
+
+
+def _stop(q: StreamingQuery) -> None:
+    """``q.stop()``, with a stop that overran the session's stop bound
+    raised as ``TimeoutError``."""
+    try:
+        q.stop()
+    except Py4JJavaError as e:
+        name = e.java_exception.getClass().getName()
+        if name != "java.util.concurrent.TimeoutException":
+            raise
+        raise TimeoutError(
+            "streaming query did not stop within spark.sql.streaming.stopTimeout"
+        ) from e
 
 
 def process_all_available(q: StreamingQuery) -> None:

@@ -4,9 +4,9 @@ The reference is strictly batch (SURVEY.md §1 last row); this is the
 [extension] that reruns its exact pipeline (tokenize → shuffle →
 count, `/root/reference/src/worker.rs:23-38`) on an unbounded text
 source.  The transformation chain is IDENTICAL to the batch operator —
-same tokenizer Column — which is the point of Structured Streaming:
-one declarative plan, two execution modes (micro-batch incrementalized
-by the engine instead of Catalyst-once).
+the same ``operators.wordcount.count_words`` stage — which is the point
+of Structured Streaming: one declarative plan, two execution modes
+(micro-batch incrementalized by the engine instead of Catalyst-once).
 
 In production the source would be Kafka (``format("kafka")``); tests
 use the file source, which has the same semantics (exactly-once per
@@ -16,9 +16,8 @@ file, append-only).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from another_map_reduce_spark.functions.text import tokenize
+from another_map_reduce_spark.operators.wordcount import count_words
 from another_map_reduce_spark.streaming.lifecycle import drain
 
 
@@ -30,12 +29,7 @@ def streaming_word_count(
     Complete-output aggregation: counts are global-so-far, exactly the
     reference's semantics if its input directory kept growing.
     """
-    lines = spark.readStream.text(input_dir)
-    return (
-        lines.select(tokenize(F.col("value"), lowercase=lowercase).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-    )
+    return count_words(spark.readStream.text(input_dir), "value", lowercase)
 
 
 def run_to_memory(stream_df: DataFrame, table_name: str, mode: str = "complete"):

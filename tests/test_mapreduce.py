@@ -2,14 +2,11 @@
 
 from __future__ import annotations
 
-import pandas as pd
+import operator
+
 import pytest
 
-from another_map_reduce_spark.operators.mapreduce import (
-    map_reduce,
-    map_reduce_associative,
-    map_reduce_pandas,
-)
+from another_map_reduce_spark.operators.mapreduce import map_reduce
 
 
 @pytest.fixture(scope="module")
@@ -44,70 +41,39 @@ def test_flatmap_multiplicity(spark, kv_df):
 
 
 def test_associative_equals_faithful(spark, kv_df):
+    """A combiner changes where values merge, not the result: a sum, and
+    a mean whose combiner adds (sum, count) pairs and whose reduce
+    divides, so the output type differs from the merged one."""
+
     def map_fn(row):
         return [(row.k, row.v)]
 
-    fast = map_reduce_associative(kv_df, map_fn, lambda a, b: a + b, value_type="long")
+    fast = map_reduce(
+        kv_df, map_fn, lambda k, vs: (k, sum(vs)), value_type="long",
+        combine_fn=operator.add,
+    )
     slow = map_reduce(kv_df, map_fn, lambda k, vs: (k, sum(vs)), value_type="long")
     assert {tuple(r) for r in fast.collect()} == {tuple(r) for r in slow.collect()}
 
+    mean = map_reduce(
+        kv_df, lambda r: [(r.k, (r.v, 1))], lambda k, vs: (k, vs[0][0] / vs[0][1]),
+        value_type="double",
+        combine_fn=lambda a, b: (a[0] + b[0], a[1] + b[1]),
+    )
+    faithful = map_reduce(
+        kv_df, map_fn, lambda k, vs: (k, sum(vs) / len(vs)), value_type="double"
+    )
+    got = {r.key: r.value for r in mean.collect()}
+    assert got == pytest.approx({"a": 10 / 3, "b": 3.5, "c": 4.0})
+    assert got == pytest.approx({r.key: r.value for r in faithful.collect()})
+
 
 def test_num_buckets_controls_partitions(spark, kv_df):
-    out = map_reduce_associative(
-        kv_df, lambda r: [(r.k, r.v)], lambda a, b: a + b, num_buckets=2,
-        value_type="long",
+    out = map_reduce(
+        kv_df, lambda r: [(r.k, r.v)], lambda k, vs: (k, vs[0]), num_buckets=2,
+        value_type="long", combine_fn=operator.add,
     )
     assert out.rdd.getNumPartitions() == 2
-
-
-def test_pandas_path_wordcount(spark):
-    texts = ["spark spark flink", "flink spark"]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-
-    def map_batch(batch: pd.DataFrame) -> pd.DataFrame:
-        words = batch["text"].str.split().explode().dropna()
-        return pd.DataFrame({"key": words, "partial": 1})
-
-    def reduce_group(g: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"key": [g["key"].iloc[0]], "value": [g["partial"].sum()]})
-
-    out = map_reduce_pandas(
-        df,
-        map_batch,
-        reduce_group,
-        map_schema="key string, partial long",
-        out_schema="key string, value long",
-    )
-    got = {r.key: r.value for r in out.collect()}
-    assert got == {"spark": 3, "flink": 2}
-
-
-def test_pandas_path_algebraic_finish(spark):
-    """Batch-level combine + Spark agg finish must agree with the
-    per-key applyInPandas reduce (and is the fast path for algebraic
-    reductions — no second Python hop)."""
-    from pyspark.sql import functions as F
-
-    texts = ["spark spark flink", "flink spark", "beam"]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-
-    def map_batch(batch: pd.DataFrame) -> pd.DataFrame:
-        words = batch["text"].str.split().explode().dropna()
-        return pd.DataFrame({"key": words, "partial": 1})
-
-    out = map_reduce_pandas(
-        df,
-        map_batch,
-        None,
-        map_schema="key string, partial long",
-        out_schema="key string, value long",
-        combine_batch_fn=lambda p: p.groupby("key", as_index=False)[
-            "partial"
-        ].sum(),
-        finish_aggs=[F.sum("partial").alias("value")],
-    )
-    got = {r.key: r.value for r in out.collect()}
-    assert got == {"spark": 3, "flink": 2, "beam": 1}
 
 
 def test_wordcount_job_end_to_end(spark, tmp_path):
@@ -126,3 +92,13 @@ def test_wordcount_job_end_to_end(spark, tmp_path):
     # one directory per bucket, like reduce_result_{r}
     buckets = {p.name for p in outdir.iterdir() if p.name.startswith("bucket=")}
     assert buckets <= {"bucket=0", "bucket=1"} and buckets
+    # "{word} {count}" lines, keys ascending within each bucket file
+    files = sorted(outdir.glob("bucket=*/part*.csv"))
+    assert files
+    written = {}
+    for f in files:
+        lines = [ln.split(" ") for ln in f.read_text().splitlines()]
+        words = [w for w, _ in lines]
+        assert words == sorted(words)
+        written.update((w, int(c)) for w, c in lines)
+    assert written == got

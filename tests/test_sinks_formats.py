@@ -9,7 +9,6 @@ from another_map_reduce_spark.operators.skew import salted_agg, salted_join
 from another_map_reduce_spark.sinks import (
     write_bucketed_table,
     write_partitioned,
-    write_text_buckets,
 )
 from another_map_reduce_spark.sources.formats import read_csv, read_json
 
@@ -73,19 +72,6 @@ def test_partitioned_write_prunes(spark, kv, tmp_path):
     # the filter must become partition pruning, not a data filter
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(part" in plan
-
-
-def test_text_buckets_layout(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("banana", 2), ("apple", 5), ("cherry", 1)], "word string, cnt long"
-    )
-    out = str(tmp_path / "buckets")
-    write_text_buckets(df, out, num_buckets=2)
-    files = sorted((tmp_path / "buckets").glob("bucket=*/part*.csv"))
-    assert files
-    for f in files:
-        words = [ln.split(" ")[0] for ln in f.read_text().splitlines()]
-        assert words == sorted(words)  # ascending within each bucket
 
 
 def test_bucketed_table_join_no_shuffle(spark, kv, tmp_path):

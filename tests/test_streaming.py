@@ -752,7 +752,10 @@ def test_stream_drain_restores_shuffle_width(spark, sf_dir):
 
 def test_drain_times_out_and_stops_query(spark, tmp_path, monkeypatch):
     """A finite stream that does not finish within the drain bound
-    raises TimeoutError, and its query is stopped, not left running."""
+    raises TimeoutError, and its query is stopped, not left running.
+    The stop is bounded as well: a batch that ignores the stop's
+    interrupt (here a sleeping foreachBatch callback) costs the caller
+    the stop bound, not the rest of the batch."""
     import time
 
     from another_map_reduce_spark.streaming import lifecycle
@@ -761,15 +764,26 @@ def test_drain_times_out_and_stops_query(spark, tmp_path, monkeypatch):
     d.mkdir()
     (d / "a.txt").write_text("one line")
     monkeypatch.setattr(lifecycle, "DRAIN_TIMEOUT_S", 1.0)
-    with pytest.raises(TimeoutError):
-        drain(
-            spark,
-            spark.readStream.text(str(d))
-            .writeStream.foreachBatch(lambda _df, _id: time.sleep(4))
-            .queryName("slow_drain")
-            .option("checkpointLocation", str(tmp_path / "ckpt")),
-        )
-    assert "slow_drain" not in {q.name for q in spark.streams.active}
+    key = "spark.sql.streaming.stopTimeout"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(TimeoutError):
+            drain(
+                spark,
+                spark.readStream.text(str(d))
+                .writeStream.foreachBatch(lambda _df, _id: time.sleep(8))
+                .queryName("slow_drain")
+                .option("checkpointLocation", str(tmp_path / "ckpt")),
+            )
+    finally:
+        spark.conf.set(key, before)
+    assert time.monotonic() - t0 < 6.0
+    # Stopped at once; the manager still lists it until the sleeping
+    # batch thread returns.
+    lingering = [q for q in spark.streams.active if q.name == "slow_drain"]
+    assert not any(q.isActive for q in lingering)
 
 
 def test_foreachbatch_upsert_runs_multiple_batches(spark, sf_dir):
